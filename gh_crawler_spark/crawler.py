@@ -458,14 +458,11 @@ class Crawler:
         # resume_round (_count_active_rows). None = unknown -> disabled.
         self._next_round_bound: int | None = None
         self.robots = robots
-        # Driver-side frontier-cardinality counter (sizes the Bloom build
-        # without a count() job per round); set by init_frontier/resume.
-        self._known_count = 0
         # Last round scheduled nothing -> next round probes batch emptiness
         # cheaply before running the full stats DAG (empty-round fast path)
         self._prev_round_empty = False
-        # Incrementally-maintained URL-seen Bloom (built once past
-        # bloom_min_keys, then add_np per round; reset on init/resume)
+        # Incrementally-maintained URL-seen Bloom: built by init_frontier or
+        # resume_round, then add_df per round
         self._bloom = None
         # pre-round pinned-RDD snapshot for _release_round_blocks (set at
         # each run_round start when truncate_lineage is on)
@@ -526,9 +523,9 @@ class Crawler:
             # Written with partition overwrite so EVERY frontier file is
             # bucketed: later per-round overwrite_partitions can only
             # replace bucketed files. This first action populates the cache.
-            self.t["frontier"].overwrite_partitions(
+            snaps = {"frontier": self.t["frontier"].overwrite_partitions(
                 fr, "bucket", {"op": "init"}, replace_all=True
-            )
+            )}
 
             # The remaining bootstrap commits are mutually independent and
             # all read only the cached `fr` (or nothing): overlap them so
@@ -537,24 +534,26 @@ class Crawler:
             # commit is independent and atomic, and `rounds` (the resume
             # barrier) is only bootstrapped after every future resolves.
             pool = ThreadPoolExecutor(max_workers=4)
-            futs = [
+            futs = {
                 # seen carries the same hash bucket as the frontier; every
                 # append is partitioned by it so the discovery backstop can
                 # prune to suspect buckets (round-1 verdict #3). Empty-table
                 # bootstraps are schema-only manifest commits — no Spark
                 # write job each.
-                pool.submit(
+                "seen": pool.submit(
                     self.t["seen"].init_empty,
                     "url_hash BIGINT, bucket INT, crawl_ts TIMESTAMP",
                     {"op": "init"},
                 ),
-                pool.submit(
+                "results": pool.submit(
                     self.t["results"].init_empty,
                     "url STRING, url_hash BIGINT, warc_ts TIMESTAMP, "
                     "status STRING, text STRING, lang STRING, round INT",
                     {"op": "init"},
                 ),
-                pool.submit(self.t["entities"].init_empty, ENTITIES_DDL, {"op": "init"}),
+                "entities": pool.submit(
+                    self.t["entities"].init_empty, ENTITIES_DDL, {"op": "init"}
+                ),
                 # host_state: one row per registrable domain seen so far;
                 # rate from robots crawl_delay (reference analog: 0.1 s/req,
                 # src/config.py:81). Append-only thereafter: rounds append
@@ -564,14 +563,14 @@ class Crawler:
                 # in the latest-wins window; the lazy refill is unaffected
                 # because init tokens start at capacity (already pinned at
                 # the cap, extra elapsed time is a no-op).
-                pool.submit(
+                "host_state": pool.submit(
                     self.t["host_state"].overwrite,
                     self._new_host_rows(
                         fr.select("registrable_domain").distinct(), asof_round=-1
                     ),
                     {"op": "init"},
                 ),
-            ]
+            }
 
             # distributed fold of the seed keys into the fresh Bloom; the
             # returned key count doubles as the frontier cardinality (no
@@ -581,12 +580,11 @@ class Crawler:
             if self._bloom is not None:
                 self._bloom.close()  # release superseded broadcast handles
             self._bloom = self._empty_bloom()
-            self._known_count, n_blocked = self._bloom.add_df(
+            n_known, n_blocked = self._bloom.add_df(
                 fr.select("url_hash", "robots_allowed"),
                 false_count_of="robots_allowed",
             )
-            for f in futs:
-                f.result()
+            snaps.update({name: f.result() for name, f in futs.items()})
             pool.shutdown()
         finally:
             fr.unpersist(blocking=False)
@@ -596,11 +594,19 @@ class Crawler:
         # never become eligible, and counting them would disarm the tail
         # fast path permanently on a blocked-heavy corpus. The blocked count
         # rides in the same Bloom-fold job (no extra action).
-        self._next_round_bound = self._known_count - n_blocked
+        self._next_round_bound = n_known - n_blocked
         self._trans_rows = 0
-        self.t["transitions"].append_local([], TRANSITIONS_SCHEMA, {"op": "init"}, overwrite=True)
-        self.t["metrics"].append_local([], METRICS_SCHEMA, {"op": "init"}, overwrite=True)
-        self.t["rounds"].append_local([], ROUNDS_SCHEMA, {"op": "init"}, overwrite=True)
+        snaps["transitions"] = self.t["transitions"].append_local(
+            [], TRANSITIONS_SCHEMA, {"op": "init"}, overwrite=True
+        )
+        snaps["metrics"] = self.t["metrics"].append_local(
+            [], METRICS_SCHEMA, {"op": "init"}, overwrite=True
+        )
+        # the bootstrap snapshot ids are what resume_round rolls back to
+        # when a crash lands before any round completed
+        self.t["rounds"].append_local(
+            [], ROUNDS_SCHEMA, {"op": "init", "snapshots": snaps}, overwrite=True
+        )
 
     def _effective_frontier(self, frontier: DataFrame, trans: DataFrame) -> DataFrame:
         """Frontier rows with the latest transition applied (latest-wins by
@@ -908,43 +914,45 @@ class Crawler:
 
     # ---------------------------------------------------------------- resume
     def resume_round(self) -> int:
-        """Next round to run; rolls tables back to the last completed round's
-        recorded snapshots (exactly-once semantics, SURVEY.md T6)."""
-        rounds = self.t["rounds"].read(self.spark)
+        """Next round to run. Rolls every table back to the snapshots the
+        last completed round recorded — before any round completed, to the
+        ones init_frontier bootstrapped — (exactly-once semantics, SURVEY.md
+        T6), then rebuilds the driver-side state from the tables."""
         self._prev_round_empty = False
         last = (
-            rounds.filter(F.col("completed"))
+            self.t["rounds"].read(self.spark)
+            .filter(F.col("completed"))
             .orderBy(F.col("round").desc())
             .limit(1)
             .collect()
         )
-        if self._bloom is not None:
-            self._bloom.close()
-            self._bloom = None
-        if not last:
-            self._known_count = self.t["frontier"].read(self.spark).count()
-            self._trans_rows = self.t["transitions"].read(self.spark).count()
-            self._next_round_bound = self._count_active_rows()
-            self._bloom = PartitionedBloom.build(
-                self.t["frontier"].read(self.spark), "url_hash",
-                n_buckets=self.cfg.n_buckets,
-                expected_per_bucket=max(1000, self.cfg.bloom_expected_keys // self.cfg.n_buckets),
-                fpp=self.cfg.bloom_fpp,
-            )
-            return 0
-        row = last[0]
-        for name, col in (
-            ("frontier", "frontier_snap"), ("seen", "seen_snap"),
-            ("results", "results_snap"), ("host_state", "host_snap"),
-            ("metrics", "metrics_snap"), ("transitions", "transitions_snap"),
-            ("entities", "entities_snap"),
-        ):
-            if self.t[name].current_snapshot_id() != row[col]:
-                self.t[name].rollback(row[col])
-        self._known_count = self.t["frontier"].read(self.spark).count()
+        if last:
+            snaps = {
+                name: last[0][col] for name, col in (
+                    ("frontier", "frontier_snap"), ("seen", "seen_snap"),
+                    ("results", "results_snap"), ("host_state", "host_snap"),
+                    ("metrics", "metrics_snap"), ("transitions", "transitions_snap"),
+                    ("entities", "entities_snap"),
+                )
+            }
+            nxt = int(last[0]["round"]) + 1
+        else:
+            snaps = self.t["rounds"].snapshot().summary.get("snapshots")
+            if snaps is None:
+                raise ValueError(
+                    f"{self.cfg.root}: the rounds table has no completed round "
+                    "and no bootstrap snapshot ids to roll back to; restart "
+                    "the crawl with init_frontier"
+                )
+            nxt = 0
+        for name, sid in snaps.items():
+            if self.t[name].current_snapshot_id() != sid:
+                self.t[name].rollback(sid)
         self._trans_rows = self.t["transitions"].read(self.spark).count()
         self._next_round_bound = self._count_active_rows()
-        # one distributed rebuild on resume; incremental add_np thereafter
+        # one distributed rebuild on resume; incremental add_df thereafter
+        if self._bloom is not None:
+            self._bloom.close()
         known = self.t["frontier"].read(self.spark).select("url_hash").unionByName(
             self.t["seen"].read(self.spark).select("url_hash")
         )
@@ -953,7 +961,7 @@ class Crawler:
             expected_per_bucket=max(1000, self.cfg.bloom_expected_keys // self.cfg.n_buckets),
             fpp=self.cfg.bloom_fpp,
         )
-        return int(row["round"]) + 1
+        return nxt
 
     def _count_active_rows(self) -> int:
         """Exact count of rows the scheduler can still see (active
@@ -961,7 +969,7 @@ class Crawler:
         re-arms the small-round fast path after a resume, where the
         incrementally-maintained bound is otherwise unknown. Production
         crawls run mostly in resumed sessions, so one extra count job here
-        (resume already pays two counts and a Bloom rebuild) keeps the
+        (resume already pays a transitions count and a Bloom rebuild) keeps the
         O(batch) tail-round behavior across restarts."""
         return int(
             self._effective_frontier(
@@ -1143,14 +1151,9 @@ class Crawler:
         # now+staleness at fetch time). Both are plain predicates on columns
         # the transition already wrote — no extra join or clock table.
         current = self._effective_frontier(frontier, trans)
-        state_ok = F.col("state") == "discovered"
-        if cfg.failure_ttl_s is not None:
-            state_ok = state_ok | (F.col("state") == "failed")
-        if cfg.staleness_s is not None:
-            state_ok = state_ok | (F.col("state") == "fetched")
         elig = (
             current.filter(
-                state_ok
+                self._active_state_pred()
                 & (F.col("next_fetch_ts") <= now_lit)
                 & F.col("robots_allowed")
             )
@@ -1555,18 +1558,10 @@ class Crawler:
         # built executor-side, OR-merged on the driver — no collect() of raw
         # url_hashes, and the returned key count IS n_new (one job serves
         # bloom-add + discovery count).
-        if self._bloom is not None:
-            n_new, n_new_blocked = self._bloom.add_df(
-                new_rows.select("url_hash", "robots_allowed"),
-                false_count_of="robots_allowed",
-            )
-        else:
-            row = new_rows.agg(
-                F.count("*").alias("n"),
-                F.sum((~F.coalesce(F.col("robots_allowed"), F.lit(True)))
-                      .cast("long")).alias("b"),
-            ).collect()[0]
-            n_new, n_new_blocked = int(row["n"]), int(row["b"] or 0)
+        n_new, n_new_blocked = self._bloom.add_df(
+            new_rows.select("url_hash", "robots_allowed"),
+            false_count_of="robots_allowed",
+        )
         tick("discover")
 
         # host_state fold: spend tokens, breaker — TOUCHED DOMAINS ONLY ----
@@ -1701,7 +1696,6 @@ class Crawler:
             {"round": k},
         )
         self._release_round_blocks(cached)
-        self._known_count += n_new
         # exactly one transition row per scheduled URL was appended
         self._trans_rows += int(n_batch)
         # Active-row bound maintenance: rows leave the schedulable set only

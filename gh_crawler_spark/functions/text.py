@@ -102,12 +102,6 @@ def extract_outlinks_py(html: bytes | str, base_url: str) -> list[str]:
     return _canonical_links(_raw_hrefs(_strip_blocks(_decode(html))), base_url)
 
 
-def extract_embedded_json_py(html: bytes | str) -> str | None:
-    """Raw embedded page-data JSON payload, or None when absent (X10)."""
-    m = _EMBED_RE.search(_decode(html))
-    return m.group(1) if m else None
-
-
 def extract_page_py(
     html: bytes | str, base_url: str
 ) -> tuple[str, list[str], str | None]:

@@ -1,4 +1,4 @@
-from gh_crawler_spark.operators.dedup import PartitionedBloom, filter_unseen  # noqa: F401
+from gh_crawler_spark.operators.dedup import PartitionedBloom  # noqa: F401
 from gh_crawler_spark.operators.scheduling import rank_fetch_batch  # noqa: F401
 from gh_crawler_spark.operators.politeness import (  # noqa: F401
     robots_allowed_udf,

@@ -139,7 +139,7 @@ class PartitionedBloom:
     maintained **incrementally**: each crawl round folds its new keys in with
     :meth:`add_df` instead of rebuilding — at steady state maintenance cost is
     O(new keys), not O(all keys). Correctness never depends on this filter
-    (exact anti-join backstop in filter_unseen); it must only never go stale
+    (exact anti-join backstop in resolve_unseen); it must only never go stale
     on the NEGATIVE side, which the add paths guarantee by construction.
 
     **Broadcast lifecycle** (round-2 verdict #1): the full bitmap dict is
@@ -411,16 +411,6 @@ class PartitionedBloom:
         return probe
 
 
-def _anti(cands: DataFrame, seen_keys: DataFrame, key_col: str,
-          broadcast_candidates: bool) -> DataFrame:
-    if broadcast_candidates:
-        hits = seen_keys.join(
-            F.broadcast(cands.select(key_col)), key_col, "left_semi"
-        )
-        return cands.join(F.broadcast(hits), key_col, "left_anti")
-    return cands.join(seen_keys, key_col, "left_anti")
-
-
 def flag_maybe_seen(
     candidates: DataFrame,
     bloom: PartitionedBloom,
@@ -428,11 +418,10 @@ def flag_maybe_seen(
     key_col: str = "url_hash",
 ) -> DataFrame:
     """Phase 1 of the J1 dedup: stamp every candidate with the Bloom verdict
-    (``__maybe_seen``). Callers that orchestrate their own job fusion (the
-    crawl round collects suspect buckets inside a larger combined action)
-    cache this and pass the distinct suspect buckets to
-    :func:`resolve_unseen`; everyone else just calls :func:`filter_unseen`.
-    """
+    (``__maybe_seen``). Cache the result, collect the distinct
+    ``pmod(key, n_buckets)`` buckets of its maybe-seen rows (the crawl round
+    does this inside a larger combined action) and pass them to
+    :func:`resolve_unseen`."""
     probe = bloom.might_contain_udf(spark or candidates.sparkSession)
     return candidates.withColumn("__maybe_seen", probe(F.col(key_col)))
 
@@ -442,85 +431,22 @@ def resolve_unseen(
     seen_loader,
     suspect_buckets: list[int],
     key_col: str = "url_hash",
-    broadcast_candidates: bool = True,
 ) -> DataFrame:
     """Phase 2: definite-negatives pass through; Bloom-positive suspects go
     through the exact anti-join against ``seen_loader(suspect_buckets)``
-    (file-pruned to the buckets that can hold a duplicate)."""
+    (file-pruned to the buckets that can hold a duplicate).
+
+    Candidates-per-round ≪ |seen|, so the seen side is never shuffled: the
+    suspect keys are broadcast, the seen files are scanned map-side for hits
+    (left_semi), and the small hit set is broadcast back for the anti-join."""
     definite_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
     if not suspect_buckets:
         return definite_new
     suspects = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    seen_keys = seen_loader(suspect_buckets).select(key_col)
-    return definite_new.unionByName(
-        _anti(suspects, seen_keys, key_col, broadcast_candidates)
+    hits = seen_loader(suspect_buckets).select(key_col).join(
+        F.broadcast(suspects.select(key_col)), key_col, "left_semi"
     )
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame | None = None,
-    key_col: str = "url_hash",
-    bloom: PartitionedBloom | None = None,
-    spark=None,
-    broadcast_candidates: bool = True,
-    seen_loader=None,
-    n_buckets: int | None = None,
-    cache_fn=None,
-) -> DataFrame:
-    """J1: candidates not in the seen set (Bloom prefilter + exact anti-join).
-
-    With a Bloom, definite-negatives bypass the join entirely: the exact
-    backstop runs only on the (tiny) probable-positive slice.
-
-    ``broadcast_candidates`` picks the join shape for the crawl steady state,
-    where candidates-per-round ≪ |seen| (10^10): instead of a shuffle
-    anti-join that would move the whole seen set, the candidate keys are
-    broadcast, ``seen`` is scanned map-side for hits (left_semi with the
-    broadcast probe), and the small hit set is broadcast back for the final
-    anti-join — the seen table is never shuffled.
-
-    ``seen_loader`` (alternative to ``seen``; requires ``bloom`` and
-    ``n_buckets``) takes the pruning one step further: the backstop scan reads
-    only the key-buckets that actually contain Bloom-positive suspects.
-    ``seen_loader(buckets)`` must return the seen keys for those
-    ``pmod(key, n_buckets)`` buckets (e.g. a SnapshotTable.read_partitions
-    over a bucket-partitioned table). At 10^10 seen rows this turns the
-    per-round backstop from a full-table map-side scan into a read of the
-    handful of files that can possibly hold a duplicate. One tiny extra job
-    (distinct buckets of the suspect slice, which is ≤ fpp·|candidates| +
-    true-dup rows) buys file-level pruning of the biggest table in the system.
-    """
-    if (seen is None) == (seen_loader is None):
-        raise ValueError("pass exactly one of seen / seen_loader")
-    if seen_loader is not None and bloom is None:
-        raise ValueError("seen_loader requires bloom (bucket pruning is driven "
-                         "by the Bloom-positive suspect slice)")
-
-    if bloom is None:
-        return _anti(candidates, seen.select(key_col), key_col, broadcast_candidates)
-    flagged = flag_maybe_seen(candidates, bloom, spark, key_col)
-    if cache_fn is not None:
-        # the probe output is consumed 2-3× (suspect-bucket collect, the
-        # definite-new branch, the anti-join branch); caching it here keeps
-        # the pandas-UDF probe to ONE execution per round
-        flagged = cache_fn(flagged)
-    if seen_loader is not None:
-        if n_buckets is None:
-            raise ValueError("seen_loader requires n_buckets")
-        suspect_buckets = [
-            int(r["b"])
-            for r in flagged.filter(F.col("__maybe_seen")).select(
-                F.pmod(F.col(key_col), F.lit(n_buckets)).cast("int").alias("b")
-            ).distinct().collect()
-        ]
-        return resolve_unseen(flagged, seen_loader, suspect_buckets, key_col,
-                              broadcast_candidates)
-    definite_new = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    suspects = flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    return definite_new.unionByName(
-        _anti(suspects, seen.select(key_col), key_col, broadcast_candidates)
-    )
+    return definite_new.unionByName(suspects.join(F.broadcast(hits), key_col, "left_anti"))
 
 
 def bucket_expr(key: Column, n_buckets: int) -> Column:

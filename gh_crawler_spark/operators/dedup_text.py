@@ -1,5 +1,6 @@
-"""Document deduplication: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup — the training-data-pipeline dedup family.
+"""Document deduplication: exact, n-gram Jaccard, MinHash+LSH, SimHash and
+the exact transitive closure of near-dup pairs — the training-data-pipeline
+dedup family.
 
 Scale notes (the whole point of each design):
 
@@ -18,7 +19,8 @@ Scale notes (the whole point of each design):
   = pairs within Hamming distance d, found by splitting the signature into
   d+1 chunks (pigeonhole: any pair at distance ≤ d shares a chunk exactly) —
   again an equi-join, never all-pairs.
-* **embedding cosine**: see operators/similarity.py (same join-shape rules).
+* **connected components**: near-dup pairs -> exact groups (min doc_id per
+  component), by min-label propagation with pointer doubling.
 """
 
 from __future__ import annotations
@@ -210,16 +212,6 @@ def _minhash_min_exprs(n_hashes: int) -> list:
         F.min(F.col("__h1") + F.lit(i) * F.col("__h2")).alias(f"h{i}")
         for i in range(n_hashes)
     ]
-
-
-def minhash_signatures(
-    docs: DataFrame, n_hashes: int = 32, k: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, sig ARRAY<BIGINT>): sig[i] = min over shingles of the i-th
-    derived hash. All built-in exprs — no UDF."""
-    sh = _with_minhash_bases(shingles_df(docs, k, text_col))
-    agg = sh.groupBy("doc_id").agg(*_minhash_min_exprs(n_hashes))
-    return agg.select("doc_id", F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -441,14 +433,6 @@ def simhash_near_pairs(
     )
 
 
-def dedup_keep_first(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Resolve near-dup pairs to a keep/drop decision: drop the larger doc_id
-    of every pair (deterministic union-find-lite; one sweep removes the bulk
-    — :func:`connected_components` gives the exact transitive closure)."""
-    drops = pairs.select(F.col("d2").alias("doc_id")).distinct()
-    return docs.join(drops, "doc_id", "left_anti")
-
-
 def connected_components(
     pairs: DataFrame, max_iter: int = 20, d1: str = "d1", d2: str = "d2"
 ) -> DataFrame:
@@ -535,10 +519,3 @@ def connected_components(
             "rounds; raise max_iter (rounds needed ~= log2(graph diameter))"
         )
     return labels
-
-
-def dedup_keep_first_exact(docs: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact group dedup: keep the min doc_id of every connected component."""
-    comp = connected_components(pairs)
-    drops = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
-    return docs.join(drops, "doc_id", "left_anti")

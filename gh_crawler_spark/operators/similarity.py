@@ -8,7 +8,7 @@
   dot with deterministic hash-derived planes), equi-join on bucket, exact
   re-rank inside buckets. Same join-shape rule as the text dedup family:
   never all-pairs, always an equi-join on a short key.
-* cosine near-dup pairs — embedding analog of near-dup detection.
+* IVF ANN — k-means cells, exact re-rank inside the probed cells.
 """
 
 from __future__ import annotations
@@ -246,12 +246,6 @@ def ivf_topk(
     qcells = ivf_assign(queries, cents, nprobe=nprobe, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "cell"
     )
-    return _ivf_rank(cells, qcells, k)
-
-
-def _ivf_rank(cells: DataFrame, qcells: DataFrame, k: int) -> DataFrame:
-    """Shared IVF re-rank: candidates share a probed cell; exact cosine
-    top-k per query (broadcast query side, bounded rank)."""
     scored = (
         cells.join(F.broadcast(qcells), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -263,72 +257,4 @@ def _ivf_rank(cells: DataFrame, qcells: DataFrame, k: int) -> DataFrame:
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "cosine", "rk")
-    )
-
-
-def ivf_write_index(
-    index_table,
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the cell-assigned corpus as a CELL-PARTITIONED snapshot table
-    — the inverted file. Every data file then belongs to exactly one cell,
-    so a probe can read nprobe/n_cells of the files instead of the corpus
-    (the same partition-pruning machinery the frontier uses for buckets)."""
-    assigned = ivf_assign(corpus, centroids, nprobe=1, id_col=id_col, vec_col=vec_col)
-    index_table.overwrite_partitions(
-        assigned.select(id_col, vec_col, "cell"), "cell",
-        {"op": "ivf_index"}, replace_all=True,
-    )
-
-
-def ivf_probe_index(
-    spark,
-    index_table,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a cell-partitioned IVF index: rank queries' nprobe nearest
-    cells, then scan ONLY those cells' files (file-level partition pruning)
-    for the exact re-rank. The collect here is the tiny distinct probed-cell
-    set (≤ |queries|·nprobe ints), never vector data."""
-    qcells = ivf_assign(queries, centroids, nprobe=nprobe, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "cell"
-    )
-    probe_cells = sorted(
-        int(r["cell"]) for r in qcells.select("cell").distinct().collect()
-    )
-    cells = index_table.read_partitions(spark, "cell", probe_cells).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"), "cell"
-    )
-    return _ivf_rank(cells, qcells, k)
-
-
-def cosine_near_dup_pairs(
-    corpus: DataFrame, threshold: float = 0.95, id_col: str = "vec_id",
-    vec_col: str = "embedding", dim: int | None = None,
-) -> DataFrame:
-    """Embedding near-dup pairs (cosine ≥ t) via LSH buckets + exact verify.
-
-    Pass ``dim`` explicitly to keep the builder action-free; omitting it
-    falls back to a one-row probe job (fine interactively, avoid in loops)."""
-    if dim is None:
-        dim = int(corpus.select(F.size(vec_col).alias("d")).first()["d"])
-    b = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_bucket_expr(F.col(vec_col), dim, 8).alias("bucket"),
-    )
-    x, y = b.alias("x"), b.alias("y")
-    return (
-        x.join(y, (F.col("x.bucket") == F.col("y.bucket")) & (F.col("x.vid") < F.col("y.vid")))
-        .withColumn("cosine", F.round(cosine_expr(F.col("x.vec"), F.col("y.vec")), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("x.vid").alias("d1"), F.col("y.vid").alias("d2"), "cosine")
     )

@@ -15,42 +15,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-_PY_WARMED: set[str] = set()
-
-
-def _prefork_python_workers(spark: SparkSession) -> None:
-    """Pre-fork one Arrow/pandas Python worker per core at session build.
-
-    The first pandas-UDF job of a session pays worker daemon startup plus a
-    per-worker ``import pandas`` (~0.5 s each, one wave across the cores) —
-    a one-time session cost that production amortizes over hours but that
-    otherwise lands inside whichever operator happens to touch the Python
-    boundary first (guide §4.5: heavyweight init belongs in setup, not the
-    measured path). One tiny 1-task-per-core pandas job moves it to session
-    construction; ``spark.python.worker.reuse`` (default on) keeps the warm
-    workers for every later task. Guarded per application id — getOrCreate
-    callers share one session and must not re-pay it."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _PY_WARMED or os.environ.get("SPARK_GRAFT_NO_PYWARM"):
-        return
-    _PY_WARMED.add(app_id)
-    try:
-        import pandas as pd  # noqa: F401
-        from pyspark.sql import functions as F
-
-        n = spark.sparkContext.defaultParallelism
-
-        @F.pandas_udf("long")
-        def _warm(s: "pd.Series") -> "pd.Series":
-            return s
-
-        spark.range(n, numPartitions=n).select(_warm("id")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-    except Exception:
-        pass  # warm-up is best-effort; a failure must never block the session
-
-
 def get_spark(
     app_name: str = "gh_crawler_spark",
     cores: int | None = None,
@@ -104,7 +68,6 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _prefork_python_workers(spark)
     try:
         # Releasing a round's localCheckpoint blocks (crawler.truncate_lineage)
         # warns "... was locally checkpointed, its lineage has been truncated"

@@ -1,6 +1,7 @@
 """§5.3-5.4: end-to-end equivalence vs the reference-semantics simulator,
 exact resume, and parallelism invariance of the crawl."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -77,6 +78,18 @@ def test_resume_equals_uninterrupted(spark, corpus, baseline, tmp_path):
     for k in range(2):
         part.run_round(k)
     resumed = Crawler(spark, _cfg(tmp_path / "part"), pages, robots)
+    assert resumed._trans_rows == 0 and resumed._bloom is None  # constructor defaults
+    # resume_round rebuilds the driver-tracked state from the tables: the
+    # real transitions-delta size, the Bloom over every known key, and an
+    # exact active-row count (never above the interrupted run's bound)
+    assert resumed.resume_round() == 2
+    assert resumed._trans_rows == resumed.t["transitions"].read(spark).count() > 0
+    known = resumed.t["frontier"].read(spark).select("url_hash").unionByName(
+        resumed.t["seen"].read(spark).select("url_hash")
+    )
+    keys = np.array([r["url_hash"] for r in known.collect()])
+    assert resumed._bloom.might_contain_np(keys).all()
+    assert 0 <= resumed._next_round_bound <= part._next_round_bound
     resumed.run(seeds=None)
     assert _crawl_outcome(spark, resumed) == want
 
@@ -102,6 +115,38 @@ def test_resume_discards_halfcommitted_round(spark, corpus, baseline, tmp_path):
 
     # and the final outcome still matches a clean run
     assert _crawl_outcome(spark, resumed) == baseline
+
+
+def test_resume_discards_halfcommitted_round_zero(spark, corpus, baseline, tmp_path):
+    """Crash inside round 0, before any rounds row exists: resume rolls every
+    table back to the snapshots init_frontier bootstrapped."""
+    pages, seeds, robots = corpus
+    c = Crawler(spark, _cfg(tmp_path / "crash0"), pages, robots)
+    c.init_frontier(seeds)
+    junk = spark.createDataFrame(
+        [("https://junk/", 123456789, None, "fetched", "junk", "en", 0)],
+        "url STRING, url_hash BIGINT, warc_ts TIMESTAMP, status STRING, "
+        "text STRING, lang STRING, round INT",
+    )
+    c.t["results"].append(junk)
+    resumed = Crawler(spark, _cfg(tmp_path / "crash0"), pages, robots)
+    assert resumed.resume_round() == 0
+    assert resumed.t["results"].read(spark).count() == 0
+    resumed.run(seeds=None)
+    assert _crawl_outcome(spark, resumed) == baseline
+
+
+def test_resume_without_bootstrap_ids_raises(spark, corpus, tmp_path):
+    """A rounds table with neither a completed row nor bootstrap snapshot
+    ids gives resume nothing to roll back to: it must say so, not skip."""
+    from gh_crawler_spark.crawler import ROUNDS_SCHEMA
+
+    pages, seeds, robots = corpus
+    c = Crawler(spark, _cfg(tmp_path / "noboot"), pages, robots)
+    c.init_frontier(seeds)
+    c.t["rounds"].append_local([], ROUNDS_SCHEMA, {"op": "init"}, overwrite=True)
+    with pytest.raises(ValueError, match="no bootstrap snapshot ids"):
+        Crawler(spark, _cfg(tmp_path / "noboot"), pages, robots).resume_round()
 
 
 def test_parallelism_invariance(spark, corpus, baseline, tmp_path):

@@ -3,7 +3,12 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from gh_crawler_spark.operators.dedup import PartitionedBloom, filter_unseen
+from gh_crawler_spark.operators.dedup import (
+    PartitionedBloom,
+    bucket_expr,
+    flag_maybe_seen,
+    resolve_unseen,
+)
 
 
 def test_bloom_no_false_negatives(spark):
@@ -22,17 +27,45 @@ def test_bloom_fpp_reasonable(spark):
     assert fp_rate < 0.05  # 1% target with headroom
 
 
-def test_filter_unseen_matches_exact_anti_join(spark):
+def test_bloom_prefilter_matches_exact_anti_join(spark):
+    """flag_maybe_seen + resolve_unseen == the exact anti-join, whether the
+    seen loader returns the whole seen set or only the suspect buckets
+    (the crawl round's bucket-pruned backstop read)."""
+    n_buckets = 64
     cands = spark.range(0, 3000).select(
         F.xxhash64("id").alias("url_hash"), F.col("id").alias("payload")
     )
-    seen = spark.range(1500, 4000).select(F.xxhash64("id").alias("url_hash"))
-    bloom = PartitionedBloom.build(seen, n_buckets=8, expected_per_bucket=400)
-    with_bloom = filter_unseen(cands, seen, bloom=bloom, spark=spark)
+    seen = spark.range(2995, 4000).select(F.xxhash64("id").alias("url_hash"))
+    bloom = PartitionedBloom.build(seen, n_buckets=n_buckets, expected_per_bucket=100)
+    flagged = flag_maybe_seen(cands, bloom, spark).cache()
+    suspect_buckets = sorted(
+        int(r["b"])
+        for r in flagged.filter(F.col("__maybe_seen"))
+        .select(bucket_expr(F.col("url_hash"), n_buckets).alias("b"))
+        .distinct()
+        .collect()
+    )
+    loaded = []
+
+    def pruned_loader(buckets):
+        loaded.append(list(buckets))
+        return seen.filter(bucket_expr(F.col("url_hash"), n_buckets).isin(buckets))
+
     exact = cands.join(seen, "url_hash", "left_anti")
-    got = sorted(r["payload"] for r in with_bloom.collect())
     want = sorted(r["payload"] for r in exact.collect())
-    assert got == want == list(range(0, 1500))
+    assert want == list(range(0, 2995))
+    assert 0 < len(suspect_buckets) < n_buckets  # the pruned read is a strict subset
+    for loader in (lambda buckets: seen, pruned_loader):
+        got = resolve_unseen(flagged, loader, suspect_buckets)
+        assert sorted(r["payload"] for r in got.collect()) == want
+    assert loaded == [suspect_buckets]
+    # no suspects: definite negatives pass through without any seen read
+    fresh = flag_maybe_seen(
+        spark.range(0, 0).select(F.xxhash64("id").alias("url_hash")), bloom, spark
+    )
+    assert resolve_unseen(fresh, pruned_loader, []).count() == 0
+    assert len(loaded) == 1
+    flagged.unpersist()
 
 
 def test_add_df_matches_build_and_counts(spark):
@@ -89,20 +122,6 @@ def test_crawler_never_collects_url_hashes():
             assert "url_hash" not in line, line
 
 
-def test_filter_unseen_without_bloom(spark):
-    cands = spark.range(0, 100).select(F.xxhash64("id").alias("url_hash"))
-    seen = spark.range(50, 100).select(F.xxhash64("id").alias("url_hash"))
-    assert filter_unseen(cands, seen).count() == 50
-
-
-def test_seen_loader_requires_bloom(spark):
-    import pytest
-
-    cands = spark.range(0, 10).select(F.xxhash64("id").alias("url_hash"))
-    with pytest.raises(ValueError, match="seen_loader requires bloom"):
-        filter_unseen(cands, seen_loader=lambda b: cands, n_buckets=8)
-
-
 def test_broadcast_lifecycle_one_full_ship_then_deltas(spark):
     """Round-2 verdict #1: the full bitmap dict is broadcast once per filter
     lifetime; per-round probes ship only touched-bucket deltas, with
@@ -117,7 +136,7 @@ def test_broadcast_lifecycle_one_full_ship_then_deltas(spark):
         )
         assert bloom.add_df(new) == 200
         seen_rounds.append(new)
-        probe = bloom.might_contain_udf(spark)  # what filter_unseen calls
+        probe = bloom.might_contain_udf(spark)  # what flag_maybe_seen calls
         all_seen = seen_rounds[0]
         for df in seen_rounds[1:]:
             all_seen = all_seen.unionByName(df)

@@ -6,8 +6,6 @@ from pyspark.sql import functions as F
 from gh_crawler_spark.operators.dedup_text import (
     connected_components,
     dedup_exact,
-    dedup_keep_first,
-    dedup_keep_first_exact,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
@@ -114,23 +112,6 @@ def test_connected_components_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iter=1)
-
-
-def test_dedup_keep_first_exact_groups(spark):
-    docs = spark.createDataFrame(
-        [(i, f"t{i}") for i in range(6)], "doc_id BIGINT, text STRING"
-    )
-    # chain 0-1-2 and pair 4-5: keep 0, 3 (untouched), 4
-    pairs = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "d1 BIGINT, d2 BIGINT")
-    kept = sorted(r["doc_id"] for r in dedup_keep_first_exact(docs, pairs).collect())
-    assert kept == [0, 3, 4]
-
-
-def test_dedup_keep_first(spark, docs):
-    pairs = ngram_jaccard_pairs(docs, k=3, threshold=0.5)
-    kept = sorted(r["doc_id"] for r in dedup_keep_first(docs, pairs).collect())
-    assert 0 in kept and 1 not in kept and 2 not in kept and 3 not in kept
-    assert 4 in kept and 5 in kept
 
 
 def _exact_jaccard_py(texts: dict[int, str], k: int = 3, cap: int | None = None):

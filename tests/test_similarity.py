@@ -1,4 +1,4 @@
-"""Similarity search: brute-force exact top-k, LSH ANN, near-dup pairs."""
+"""Similarity search: brute-force exact top-k, LSH ANN, IVF ANN."""
 
 import math
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from gh_crawler_spark.operators.similarity import (
     brute_force_topk,
-    cosine_near_dup_pairs,
     ivf_topk,
     lsh_topk,
 )
@@ -104,63 +103,7 @@ def test_ivf_recall(spark):
     a = {(r["query_id"], r["neighbor_id"], r["rk"]) for r in full.collect()}
     e = {(r["query_id"], r["neighbor_id"], r["rk"]) for r in exact.collect()}
     assert a == e
+    # empty-cluster fallback: the quantizer keeps every cell after Lloyd
+    from gh_crawler_spark.operators.similarity import ivf_build_centroids
 
-
-def test_ivf_partitioned_index_prunes_files(spark, tmp_path):
-    """IVF storage-side pruning: the cell-assigned corpus written as a
-    cell-partitioned snapshot table; a probe reads a STRICT SUBSET of the
-    index files (nprobe/n_cells of them) and returns exactly what the
-    in-memory IVF pipeline returns with the same centroids."""
-    import numpy as np
-
-    from gh_crawler_spark.operators.similarity import (
-        ivf_assign,
-        ivf_build_centroids,
-        ivf_probe_index,
-        ivf_write_index,
-    )
-    from gh_crawler_spark.tables import SnapshotTable
-
-    rng = np.random.RandomState(7)
-    base = rng.randn(200, 64)
-    rows = [(i, base[i].tolist()) for i in range(200)]
-    for j in range(20):
-        rows.append((1000 + j, (base[j] + 0.12 * rng.randn(64)).tolist()))
-    emb = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    queries = emb.filter(F.col("vec_id") >= 1000).limit(5)
-
-    cents = ivf_build_centroids(emb, n_cells=16, lloyd_iters=1)
-    assert cents.count() == 16  # empty-cluster fallback keeps every cell
-    idx = SnapshotTable(str(tmp_path), "ivf_index")
-    ivf_write_index(idx, emb, cents)
-
-    # the probe's scan is file-level pruned to the probed cells
-    qcells = ivf_assign(queries, cents, nprobe=3)
-    probe_cells = sorted(int(r["cell"]) for r in qcells.select("cell").distinct().collect())
-    pruned_files = set(idx.read_partitions(spark, "cell", probe_cells).inputFiles())
-    all_files = set(idx.read(spark).inputFiles())
-    assert pruned_files and pruned_files < all_files
-
-    got = ivf_probe_index(spark, idx, cents, queries, k=5, nprobe=3)
-    # identical to the in-memory rank over the same centroids/probe set
-    cells_mem = ivf_assign(emb, cents, nprobe=1).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"), "cell"
-    )
-    from gh_crawler_spark.operators.similarity import _ivf_rank
-
-    want = _ivf_rank(
-        cells_mem,
-        qcells.select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"), "cell"
-        ),
-        k=5,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_cosine_near_dup_pairs(spark, vectors):
-    pairs = {(r["d1"], r["d2"]): r["cosine"] for r in
-             cosine_near_dup_pairs(vectors, threshold=0.95).collect()}
-    assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
-    assert (2, 3) in pairs
-    assert (0, 4) not in pairs and (0, 2) not in pairs
+    assert ivf_build_centroids(emb, n_cells=16, lloyd_iters=1).count() == 16
