@@ -1,229 +1,43 @@
-"""Structured Streaming layer: extract -> dedup -> windowed metrics."""
+"""Restart of an incremental crawl over an existing warehouse.
 
-import pytest
+Each increment runs one crawl round; a restarted driver holds a fresh
+Crawler whose driver-tracked state is at constructor defaults, so its first
+increment must route through resume_round before the next round runs."""
 
-from gh_crawler_spark.sources.pages import PAGES_SCHEMA, generate_pages
-from gh_crawler_spark.streaming.stream import (
-    dedup_stream,
-    rate_limit_stream,
-    stream_extract,
-    throughput_metrics_stream,
-)
+from pyspark.sql import functions as F
 
-
-@pytest.fixture(scope="module")
-def drop_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("drop")
-    generate_pages(spark, 120, seed=5, n_domains=20).write.mode("overwrite").parquet(str(d))
-    return str(d)
+from gh_crawler_spark.crawler import Crawler, CrawlConfig
+from gh_crawler_spark.sources.pages import generate_pages
 
 
-def _run(query_builder, name):
-    q = query_builder.queryName(name).format("memory").trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    return q
-
-
-def test_stream_extract_and_dedup(spark, drop_dir, tmp_path):
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(drop_dir)
-    deduped = dedup_stream(stream_extract(stream))
-    q = _run(
-        deduped.writeStream.option("checkpointLocation", str(tmp_path / "ck1")),
-        "t_extracted",
-    )
-    out = spark.sql("SELECT * FROM t_extracted")
-    assert out.count() == 120  # corpus has unique canonical urls
-    row = out.first()
-    assert row["url_hash"] is not None and row["text"]
-    # canonical urls: no fragments, lowercase hosts
-    assert all("#" not in r["canonical_url"] for r in out.collect())
-    q.stop()
-
-
-def test_dedup_stream_same_url_different_ts(spark, tmp_path):
-    """Two arrivals of the SAME url at different event times inside the
-    watermark horizon -> one survivor (first arrival wins). The round-3
-    verdict's gap: keying on [url_hash, warc_ts] let both pass."""
-    import datetime as dt
-
-    html = b"<html><body><p>same page refetched</p></body></html>"
-    rows = [
-        ("http://dup.example.com/page", dt.datetime(2024, 6, 1, 0, 0, 0), html, "", "en"),
-        # same canonical url (fragment stripped), 5 min later
-        ("http://dup.example.com/page#frag", dt.datetime(2024, 6, 1, 0, 5, 0), html, "", "en"),
-        ("http://other.example.com/x", dt.datetime(2024, 6, 1, 0, 1, 0), html, "", "en"),
-    ]
-    src = str(tmp_path / "dup_src")
-    spark.createDataFrame(rows, PAGES_SCHEMA).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-    deduped = dedup_stream(stream_extract(stream), watermark="1 hour")
-    q = _run(
-        deduped.writeStream.option("checkpointLocation", str(tmp_path / "ck_dup")),
-        "t_dup",
-    )
-    out = spark.sql("SELECT canonical_url, warc_ts FROM t_dup").collect()
-    assert len(out) == 2  # dup.example.com/page survives once + other.example.com/x
-    survivors = {r["canonical_url"] for r in out}
-    assert survivors == {
-        "http://dup.example.com/page",
-        "http://other.example.com/x",
-    }
-    q.stop()
-
-
-def test_rate_limit_stream_stateful(spark, drop_dir, tmp_path):
-    """T1 as applyInPandasWithState: a tight per-domain bucket admits at most
-    `capacity` urls of each domain in the (single) micro-batch; the rest are
-    emitted admitted=false, never dropped."""
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(drop_dir)
-    limited = rate_limit_stream(stream_extract(stream), rate_per_s=0.0, capacity=3.0)
-    q = _run(
-        limited.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck3")),
-        "t_limited",
-    )
-    out = spark.sql(
-        "SELECT registrable_domain, "
-        "sum(CASE WHEN admitted THEN 1 ELSE 0 END) AS ok, count(*) AS n "
-        "FROM t_limited GROUP BY registrable_domain"
-    ).collect()
-    assert out  # stream produced per-domain rows
-    total = sum(r["n"] for r in out)
-    assert total == 120  # nothing dropped, only flagged
-    for r in out:
-        assert r["ok"] <= 3
-        assert r["ok"] == min(3, r["n"])  # bucket admits exactly its capacity
-    q.stop()
-
-
-def test_token_bucket_matches_batch_round_semantics():
-    """Property: on round-quantized event sequences the per-row streaming
-    bucket is EXACTLY the batch engine's per-round token bucket (refill
-    min(cap, t + rate·Δ) then admit ⌊tokens⌋) — the two implementations of
-    the T1 spec agree event-for-event."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from gh_crawler_spark.streaming.stream import token_bucket_admit
-
-    @settings(max_examples=60, deadline=None)
-    @given(
-        st.lists(st.integers(0, 9), min_size=1, max_size=10),
-        st.floats(0.01, 0.5),
-        st.floats(1.0, 8.0),
-    )
-    def check(counts, rate, capacity):
-        round_s = 30.0
-        ts = [k * round_s for k, c in enumerate(counts) for _ in range(c)]
-        got, _, _ = token_bucket_admit(ts, capacity, None, rate, capacity)
-        # batch reference: the crawler's round recurrence
-        tokens, want = capacity, []
-        for k, c in enumerate(counts):
-            if k > 0:
-                tokens = min(capacity, tokens + rate * round_s)
-            n = min(c, int(tokens))
-            want += [True] * n + [False] * (c - n)
-            tokens -= n
-        assert got == want
-
-    check()
-
-
-def test_token_bucket_paces_within_batch():
-    """The intra-batch fix: events spread across a long event-time window
-    are paced row-by-row — a burst arriving early does not get the whole
-    window's refill credited up front."""
-    from gh_crawler_spark.streaming.stream import token_bucket_admit
-
-    # capacity 2, rate 0.1/s: burst of 5 at t=0, then one event at t=100
-    got, tokens, _ = token_bucket_admit(
-        [0.0] * 5 + [100.0], 2.0, None, 0.1, 2.0
-    )
-    assert got == [True, True, False, False, False, True]
-    # old batch-max semantics would have refilled 10 tokens (capped 2) at
-    # t=0 and admitted nothing at t=100; per-row pacing admits it
-    assert tokens == 1.0
-
-
-def test_throughput_metrics_stream(spark, drop_dir, tmp_path):
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(drop_dir)
-    metrics = throughput_metrics_stream(stream_extract(stream), window="1 day")
-    q = _run(
-        metrics.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck2")),
-        "t_metrics",
-    )
-    out = spark.sql("SELECT sum(n_urls) AS total FROM t_metrics").first()
-    # append mode emits only watermark-finalized windows: the trailing
-    # window (still inside the watermark horizon at stream end) is withheld
-    assert 100 <= out["total"] <= 120
-    q.stop()
-
-
-def test_foreach_batch_crawl_rounds_follow_microbatches(spark, drop_dir, tmp_path):
-    """Micro-batch wrapper: an arriving batch of pages seeds the frontier
-    and executes exactly one crawl round per micro-batch, with all state in
-    the snapshot tables (not Spark's state store)."""
-    from gh_crawler_spark.crawler import Crawler, CrawlConfig
-    from gh_crawler_spark.sources.pages import generate_pages
-    from gh_crawler_spark.streaming.stream import run_foreach_batch_crawl
-
-    pages = generate_pages(spark, 120, seed=5, n_domains=20)
-    cfg = CrawlConfig(root=str(tmp_path / "fb"), n_buckets=4, max_rounds=5)
-    c = Crawler(spark, cfg, pages)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(drop_dir)
-    q = run_foreach_batch_crawl(spark, stream, c, str(tmp_path / "ck_fb")).start()
-    q.awaitTermination(180)
-    rounds = c.t["rounds"].read(spark).orderBy("round").collect()
-    assert len(rounds) == 1 and rounds[0]["round"] == 0  # 1 batch -> 1 round
-    assert rounds[0]["completed"]
-    # the batch's pages were seeded and fetched (subject to politeness)
-    assert c.t["results"].read(spark).count() > 0
-    q.stop()
-
-
-def test_foreach_batch_crawl_restart_resumes_driver_state(spark, drop_dir, tmp_path):
-    """Restarted stream over an existing warehouse (round-4 ADVICE, medium):
-    the first micro-batch must route through resume_round so the fresh
-    crawler's driver-tracked state is real — _trans_rows reflects the actual
-    transitions delta (the broadcast hint is no longer force-armed at the
-    constructor default 0), the Bloom and active-row bound are rebuilt, and
-    the next round lands after the last completed one."""
-    from gh_crawler_spark.crawler import Crawler, CrawlConfig
-    from gh_crawler_spark.sources.pages import generate_pages
-    from gh_crawler_spark.streaming.stream import run_foreach_batch_crawl
-
+def test_foreach_batch_crawl_restart_resumes_driver_state(spark, tmp_path):
+    """The restarted crawler's driver-tracked state must be real after
+    resume_round: _trans_rows reflects the actual transitions delta (the
+    broadcast hint is not force-armed at the constructor default 0), the
+    Bloom and active-row bound are rebuilt, and the next round lands after
+    the last completed one."""
     pages = generate_pages(spark, 120, seed=5, n_domains=20)
     root = str(tmp_path / "fbr")
-    # tiny per-domain token capacity: the first micro-batch round leaves
-    # eligible rows behind, so the restarted round has real work to commit
+    # tiny per-domain token capacity: the first round leaves eligible rows
+    # behind, so the restarted round has real work to commit
     cfg = CrawlConfig(root=root, n_buckets=4, max_rounds=5,
                       token_capacity_s=0.2)
+    seeds = pages.select(F.col("url"), F.lit(cfg.default_priority).alias("priority"))
     c1 = Crawler(spark, cfg, pages)
-    q = run_foreach_batch_crawl(spark, stream_src(spark, drop_dir), c1,
-                                str(tmp_path / "ck_a")).start()
-    q.awaitTermination(180)
-    q.stop()
+    c1.init_frontier(seeds)
+    c1.run_round(0)
     n_trans = c1.t["transitions"].read(spark).count()
 
-    # restart: FRESH crawler over the same root, new checkpoint dir so the
-    # drop directory is re-delivered as a new micro-batch
+    # restart: FRESH crawler over the same root
     c2 = Crawler(spark, cfg, pages)
     assert c2._trans_rows == 0 and c2._bloom is None  # constructor defaults
-    q2 = run_foreach_batch_crawl(spark, stream_src(spark, drop_dir), c2,
-                                 str(tmp_path / "ck_b")).start()
-    q2.awaitTermination(180)
-    q2.stop()
+    k = c2.resume_round()
+    assert k == 1
+    c2.run_round(k)
     # resume_round ran before the round: real delta count (+ the new round's
     # own appended transitions), bound/Bloom rebuilt, round numbering moved on
     assert c2._trans_rows >= n_trans
     assert c2._bloom is not None
     assert c2._next_round_bound is not None
     rounds = sorted(r["round"] for r in c2.t["rounds"].read(spark).collect())
-    # round numbering continues after the last completed round even though
-    # the fresh checkpoint re-delivers batch_id 0
     assert rounds == [0, 1]
-
-
-def stream_src(spark, drop_dir):
-    return spark.readStream.schema(PAGES_SCHEMA).parquet(drop_dir)
