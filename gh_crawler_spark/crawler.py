@@ -39,8 +39,6 @@ URLs (reference k=3, ``src/aggressive_pr_scraper.py:302``) or the round cap
 from __future__ import annotations
 
 import datetime as dt
-import os
-import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -375,6 +373,114 @@ PAYLOAD_DDL = (
     "createdAt: STRING, body: STRING>>>>>>>>>>>"
 )
 
+# table -> its snapshot-id column in ROUNDS_SCHEMA, in column order
+_ROUND_SNAPS = {
+    "frontier": "frontier_snap", "seen": "seen_snap", "results": "results_snap",
+    "host_state": "host_snap", "metrics": "metrics_snap",
+    "transitions": "transitions_snap", "entities": "entities_snap",
+}
+
+
+def _round_result(k: int, wall_ms: int, **counts) -> dict:
+    """A round's stats dict; every counter not given is 0."""
+    return {"round": k, "eligible": 0, "fetched": 0, "transient": 0, "missing": 0,
+            "links": 0, "new": 0, "wall_ms": wall_ms, **counts}
+
+
+@dataclass
+class _FetchCounts:
+    """A round's fetch counters, from its second stats action."""
+    batch: int = 0
+    ok: int = 0
+    transient: int = 0
+    raw_links: int = 0
+    by_pid: dict[int, list[int]] = field(default_factory=dict)  # pid -> [ok, failed]
+
+    @property
+    def missing(self) -> int:
+        return self.batch - self.ok - self.transient
+
+
+class _Round:
+    """Everything that lives for exactly one crawl round: its number and
+    virtual clock, the round-local cached frames, the pre-round pinned-RDD
+    baseline, the commit pool and the phase timer.
+
+    Leaving the ``with`` block — by return or by exception — first waits
+    for every commit still running in the pool, then frees the round's
+    blocks: no background append outlives run_round or reads a block that
+    is already gone."""
+
+    def __init__(self, crawler: Crawler, k: int):
+        self.spark, self.truncate = crawler.spark, crawler.cfg.truncate_lineage
+        self.k, self.now = k, crawler.now(k)
+        self.cached: list[DataFrame] = []
+        # pre-round pinned RDDs: the release diff frees exactly what this
+        # round checkpoints, nothing else
+        self.base_rdd_ids = (
+            {int(i) for i in self._pinned().keySet().toArray()} if self.truncate else None
+        )
+        self.pool = ThreadPoolExecutor(max_workers=6)
+        self.marks: list[tuple[str, float]] = []
+        self.t0 = time.monotonic()
+
+    def _pinned(self):
+        """Every RDD pinned in the block manager (includes localCheckpoint
+        blocks, which DataFrame.unpersist cannot reach)."""
+        return self.spark.sparkContext._jsc.getPersistentRDDs()
+
+    def __enter__(self) -> _Round:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.pool.shutdown(wait=True)
+        # Persisted frames unpersist directly; truncated (localCheckpoint)
+        # frames are freed by diffing pinned RDD ids against the round-start
+        # baseline — the deterministic release that makes lineage truncation
+        # memory-safe across long crawls. Long-lived caches (the fetch
+        # index, resume-time reads) predate the round and are never in it.
+        for df in self.cached:
+            df.unpersist(blocking=False)
+        if self.base_rdd_ids is not None:
+            jmap = self._pinned()
+            for key in jmap.keySet().toArray():
+                if int(key) not in self.base_rdd_ids:
+                    jmap.get(key).unpersist(False)
+
+    def phase(self, name: str) -> None:
+        """Label this thread's next jobs ``r<k>:<name>`` and start the
+        phase's timer (the previous phase ends here)."""
+        self.spark.sparkContext.setJobDescription(f"r{self.k}:{name}")
+        self.marks.append((name, time.monotonic()))
+
+    def trace(self) -> tuple[int, dict[str, int]]:
+        """Wall ms since the round started and each phase's wall ms; the
+        first phase starts with the round, so the phases sum to the wall."""
+        cuts = [self.t0] + [t for _, t in self.marks[1:]] + [time.monotonic()]
+        ms = [int((t - self.t0) * 1000) for t in cuts]
+        return ms[-1], {name: b - a for (name, _), a, b in zip(self.marks, ms, ms[1:])}
+
+    def materialize(self, df: DataFrame) -> DataFrame:
+        """Cache a round-local frame; freed when the round exits.
+
+        truncate_lineage=True (default): lazy localCheckpoint — the data is
+        cached exactly like persist, but every downstream consumer plans
+        against a flat LogicalRDD instead of re-carrying (and re-analyzing,
+        and re-shipping over py4j) the full logical tree through the
+        effective-frontier window. truncate_lineage=False: plain persist —
+        full lineage kept for recompute-on-executor-loss deployments."""
+        df = df.localCheckpoint(eager=False) if self.truncate else df.persist()
+        self.cached.append(df)
+        return df
+
+    def submit(self, table: SnapshotTable, df: DataFrame, partition_by: str | None = None):
+        """Append ``df`` to ``table`` in the commit pool; its jobs are
+        labelled ``r<k>:commit:<table>`` (job descriptions are per thread)."""
+        def run() -> int:
+            self.spark.sparkContext.setJobDescription(f"r{self.k}:commit:{table.name}")
+            return table.append(df, {"round": self.k}, partition_by)
+        return self.pool.submit(run)
+
 
 class Crawler:
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
@@ -464,9 +570,6 @@ class Crawler:
         # Incrementally-maintained URL-seen Bloom: built by init_frontier or
         # resume_round, then add_df per round
         self._bloom = None
-        # pre-round pinned-RDD snapshot for _release_round_blocks (set at
-        # each run_round start when truncate_lineage is on)
-        self._round_base_rdd_ids: set[int] | None = None
         # the fetch-index cache has been physically materialized (so its RDD
         # id is registered and can never be mistaken for a round-local block
         # by the release diff — see run_round's pre-snapshot force)
@@ -533,59 +636,61 @@ class Crawler:
             # same reason the per-round commit pool is: each SnapshotTable
             # commit is independent and atomic, and `rounds` (the resume
             # barrier) is only bootstrapped after every future resolves.
-            pool = ThreadPoolExecutor(max_workers=4)
-            futs = {
-                # seen carries the same hash bucket as the frontier; every
-                # append is partitioned by it so the discovery backstop can
-                # prune to suspect buckets (round-1 verdict #3). Empty-table
-                # bootstraps are schema-only manifest commits — no Spark
-                # write job each.
-                "seen": pool.submit(
-                    self.t["seen"].init_empty,
-                    "url_hash BIGINT, bucket INT, crawl_ts TIMESTAMP",
-                    {"op": "init"},
-                ),
-                "results": pool.submit(
-                    self.t["results"].init_empty,
-                    "url STRING, url_hash BIGINT, warc_ts TIMESTAMP, "
-                    "status STRING, text STRING, lang STRING, round INT",
-                    {"op": "init"},
-                ),
-                "entities": pool.submit(
-                    self.t["entities"].init_empty, ENTITIES_DDL, {"op": "init"}
-                ),
-                # host_state: one row per registrable domain seen so far;
-                # rate from robots crawl_delay (reference analog: 0.1 s/req,
-                # src/config.py:81). Append-only thereafter: rounds append
-                # only touched domains (see _read_host_state), compact()
-                # folds. asof_round=-1 so a domain touched in round 0 (which
-                # appends an asof_round=0 row) never ties with its init row
-                # in the latest-wins window; the lazy refill is unaffected
-                # because init tokens start at capacity (already pinned at
-                # the cap, extra elapsed time is a no-op).
-                "host_state": pool.submit(
-                    self.t["host_state"].overwrite,
-                    self._new_host_rows(
-                        fr.select("registrable_domain").distinct(), asof_round=-1
+            # Leaving the `with` waits for every bootstrap commit, also
+            # when the Bloom fold raises, so none still reads `fr` when
+            # the `finally` unpersists it.
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                futs = {
+                    # seen carries the same hash bucket as the frontier; every
+                    # append is partitioned by it so the discovery backstop can
+                    # prune to suspect buckets (round-1 verdict #3). Empty-table
+                    # bootstraps are schema-only manifest commits — no Spark
+                    # write job each.
+                    "seen": pool.submit(
+                        self.t["seen"].init_empty,
+                        "url_hash BIGINT, bucket INT, crawl_ts TIMESTAMP",
+                        {"op": "init"},
                     ),
-                    {"op": "init"},
-                ),
-            }
+                    "results": pool.submit(
+                        self.t["results"].init_empty,
+                        "url STRING, url_hash BIGINT, warc_ts TIMESTAMP, "
+                        "status STRING, text STRING, lang STRING, round INT",
+                        {"op": "init"},
+                    ),
+                    "entities": pool.submit(
+                        self.t["entities"].init_empty, ENTITIES_DDL, {"op": "init"}
+                    ),
+                    # host_state: one row per registrable domain seen so far;
+                    # rate from robots crawl_delay (reference analog: 0.1 s/req,
+                    # src/config.py:81). Append-only thereafter: rounds append
+                    # only touched domains (see _read_host_state), compact()
+                    # folds. asof_round=-1 so a domain touched in round 0 (which
+                    # appends an asof_round=0 row) never ties with its init row
+                    # in the latest-wins window; the lazy refill is unaffected
+                    # because init tokens start at capacity (already pinned at
+                    # the cap, extra elapsed time is a no-op).
+                    "host_state": pool.submit(
+                        self.t["host_state"].overwrite,
+                        self._new_host_rows(
+                            fr.select("registrable_domain").distinct(), asof_round=-1
+                        ),
+                        {"op": "init"},
+                    ),
+                }
 
-            # distributed fold of the seed keys into the fresh Bloom; the
-            # returned key count doubles as the frontier cardinality (no
-            # separate count job). Folded from the cached `fr` — the written
-            # frontier holds exactly these rows by construction, so the old
-            # read-back of the fresh parquet was a redundant scan.
-            if self._bloom is not None:
-                self._bloom.close()  # release superseded broadcast handles
-            self._bloom = self._empty_bloom()
-            n_known, n_blocked = self._bloom.add_df(
-                fr.select("url_hash", "robots_allowed"),
-                false_count_of="robots_allowed",
-            )
+                # distributed fold of the seed keys into the fresh Bloom; the
+                # returned key count doubles as the frontier cardinality (no
+                # separate count job). Folded from the cached `fr` — the written
+                # frontier holds exactly these rows by construction, so the old
+                # read-back of the fresh parquet was a redundant scan.
+                if self._bloom is not None:
+                    self._bloom.close()  # release superseded broadcast handles
+                self._bloom = self._empty_bloom()
+                n_known, n_blocked = self._bloom.add_df(
+                    fr.select("url_hash", "robots_allowed"),
+                    false_count_of="robots_allowed",
+                )
             snaps.update({name: f.result() for name, f in futs.items()})
-            pool.shutdown()
         finally:
             fr.unpersist(blocking=False)
         # every allowed seed starts 'discovered': the active-row bound that
@@ -918,6 +1023,7 @@ class Crawler:
         last completed round recorded — before any round completed, to the
         ones init_frontier bootstrapped — (exactly-once semantics, SURVEY.md
         T6), then rebuilds the driver-side state from the tables."""
+        self.spark.sparkContext.setJobDescription("resume")
         self._prev_round_empty = False
         last = (
             self.t["rounds"].read(self.spark)
@@ -927,14 +1033,7 @@ class Crawler:
             .collect()
         )
         if last:
-            snaps = {
-                name: last[0][col] for name, col in (
-                    ("frontier", "frontier_snap"), ("seen", "seen_snap"),
-                    ("results", "results_snap"), ("host_state", "host_snap"),
-                    ("metrics", "metrics_snap"), ("transitions", "transitions_snap"),
-                    ("entities", "entities_snap"),
-                )
-            }
+            snaps = {name: last[0][col] for name, col in _ROUND_SNAPS.items()}
             nxt = int(last[0]["round"]) + 1
         else:
             snaps = self.t["rounds"].snapshot().summary.get("snapshots")
@@ -979,79 +1078,48 @@ class Crawler:
             .count()
         )
 
-    def _commit_empty_round(self, k: int, t_start: float) -> dict:
-        """Nothing eligible: record the round for resume/termination
-        bookkeeping. No host_state write at all — token refill is LAZY
-        (computed from asof_round at read time, see _read_host_state), and
-        an empty round changes nothing else (adapt/breaker are no-ops on
-        zero outcomes, failure_count < threshold between rounds by the
-        trip-reset invariant)."""
+    def _finish_no_batch(self, rc: _Round, current: DataFrame) -> dict:
+        """Nothing scheduled this round: stop, or record an empty round."""
+        # A10 drained fast path: when NO row can ever become eligible again
+        # the caller stops immediately and nothing is committed — nothing
+        # changed, nothing will; resume replays the same empty round.
+        if current.filter(self._active_state_pred()).limit(1).count() == 0:
+            wall_ms, phases = rc.trace()
+            return _round_result(rc.k, wall_ms, drained=True, phases=phases)
+        # Record the empty round for resume/termination bookkeeping. No
+        # host_state write at all — token refill is LAZY (computed from
+        # asof_round at read time, see _read_host_state), and an empty round
+        # changes nothing else (adapt/breaker are no-ops on zero outcomes,
+        # failure_count < threshold between rounds by the trip-reset
+        # invariant).
         self._prev_round_empty = True
-        host_snap = self.t["host_state"].current_snapshot_id()
-        wall_ms = int((time.monotonic() - t_start) * 1000)
-        snaps = {
-            n: self.t[n].current_snapshot_id()
-            for n in ("frontier", "seen", "results", "transitions", "entities")
-        }
-        metrics_snap = self.t["metrics"].append_local(
-            [(k, "fetch", -1, 0, 0, 0, wall_ms, snaps["frontier"])],
-            METRICS_SCHEMA,
-            {"round": k},
-        )
+        rc.phase("commit")
+        snaps = {n: self.t[n].current_snapshot_id() for n in _ROUND_SNAPS if n != "metrics"}
+        wall_ms, phases = self._record_round(rc, snaps, [("fetch", -1, 0, 0, 0)], (0, 0, 0, 0))
+        return _round_result(rc.k, wall_ms, phases=phases)
+
+    def _record_round(self, rc: _Round, snaps: dict, counters: list[tuple],
+                      totals: tuple[int, int, int, int]) -> tuple[int, dict[str, int]]:
+        """Close the round's trace; write its metrics rows, then its rounds
+        row (the resume barrier) last."""
+        # counters: (stage, partition_id, urls_fetched, urls_deduped,
+        # failures); totals: fetched, failed, discovered, eligible. One
+        # `stage=<phase>` row per phase carries that phase's wall time; the
+        # phase rows sum to the round's wall_ms.
+        wall_ms, phases = rc.trace()
+        k, fsnap = rc.k, snaps["frontier"]
+        rows = [(k, *c, wall_ms, fsnap) for c in counters]
+        rows += [(k, name, -1, 0, 0, 0, ms, fsnap) for name, ms in phases.items()]
+        snaps["metrics"] = self.t["metrics"].append_local(rows, METRICS_SCHEMA, {"round": k})
         self.t["rounds"].append_local(
-            [(k, True, 0, 0, 0, 0, wall_ms, snaps["frontier"], snaps["seen"],
-              snaps["results"], host_snap, metrics_snap, snaps["transitions"],
-              snaps["entities"])],
+            [(k, True, *totals, wall_ms, *(snaps[n] for n in _ROUND_SNAPS))],
             ROUNDS_SCHEMA,
             {"round": k},
         )
-        return {
-            "round": k, "eligible": 0, "fetched": 0, "transient": 0,
-            "missing": 0, "links": 0, "new": 0, "wall_ms": wall_ms,
-        }
-
-    def _persistent_rdd_ids(self) -> set[int]:
-        """Ids of every RDD currently pinned in the block manager (includes
-        localCheckpoint blocks, which DataFrame.unpersist cannot reach)."""
-        jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
-    def _release_round_blocks(self, cached: list) -> None:
-        """Free the round's cached working set. Persisted frames unpersist
-        directly; truncated (localCheckpoint) frames are freed by diffing
-        persistent RDD ids against the snapshot taken at round start — the
-        deterministic release that makes lineage truncation memory-safe
-        across long crawls. Long-lived caches (the fetch index, resume-time
-        reads) predate the round and are never in the diff."""
-        for df in cached:
-            df.unpersist(blocking=False)
-        if self.cfg.truncate_lineage and self._round_base_rdd_ids is not None:
-            jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
-            for key in jmap.keySet().toArray():
-                if int(key) not in self._round_base_rdd_ids:
-                    jmap.get(key).unpersist(False)
-            self._round_base_rdd_ids = None
-
-    def _finish_no_batch(self, k: int, t_start: float, cached: list,
-                         current: DataFrame) -> dict:
-        """Nothing scheduled this round: release the round's persisted
-        working set, probe whether ANY row can ever become eligible again
-        (A10 drained fast path — the caller stops immediately and skips the
-        bookkeeping commit), else record an empty round."""
-        self._release_round_blocks(cached)
-        drained = current.filter(self._active_state_pred()).limit(1).count() == 0
-        if drained:
-            wall_ms = int((time.monotonic() - t_start) * 1000)
-            return {
-                "round": k, "eligible": 0, "fetched": 0, "transient": 0,
-                "missing": 0, "links": 0, "new": 0, "wall_ms": wall_ms,
-                "drained": True,
-            }
-        return self._commit_empty_round(k, t_start)
+        return wall_ms, phases
 
     # ----------------------------------------------------------------- round
     def run_round(self, k: int) -> dict:
-        cached: list = []
         if self.cfg.truncate_lineage and not self._pages_idx_forced:
             # ADVICE r5 (medium): persist() registers its RDD id only at
             # first PHYSICAL execution — if the long-lived fetch-index cache
@@ -1060,92 +1128,112 @@ class Crawler:
             # round-local and silently unpersist it, recomputing the corpus
             # pipeline on every later round's scan (crawl.py / e2e entry
             # points; bench.py pre-forces it with a count). Materialize it
-            # BEFORE the base snapshot, once per crawler — a cache-only scan
-            # when a caller already forced it.
+            # BEFORE the round's base snapshot, once per crawler — a
+            # cache-only scan when a caller already forced it.
             self.pages_idx.count()
             self._pages_idx_forced = True
-        # snapshot of pre-round pinned RDDs: _release_round_blocks frees
-        # exactly what this round checkpoints, nothing else
-        self._round_base_rdd_ids = (
-            self._persistent_rdd_ids() if self.cfg.truncate_lineage else None
-        )
-        try:
-            return self._run_round_impl(k, cached)
-        except BaseException:
-            # ADVICE r5 (low): without this, an exception mid-round leaks the
-            # round's localCheckpoint blocks — and the NEXT round's base
-            # snapshot would adopt the leaked ids as pre-existing, so they
-            # would never be deterministically freed (only by JVM GC, the
-            # erratic-memory failure mode the diff mechanism prevents).
-            self._release_round_blocks(cached)
-            raise
+        with _Round(self, k) as rc:
+            return self._run_round_impl(rc)
 
-    def _run_round_impl(self, k: int, cached: list) -> dict:
-        cfg, spark = self.cfg, self.spark
-        now = self.now(k)
-        now_lit = F.lit(now)
-        t_start = time.monotonic()
-        prof: dict[str, float] = {}
-        _last = [t_start]
-
-        def tick(stage: str) -> None:
-            t = time.monotonic()
-            prof[stage] = round(t - _last[0], 2)
-            _last[0] = t
-
-        def jd(name: str) -> None:
-            # label jobs per crawl phase (thread-local, so the commit pool
-            # labels its own) — makes event-log/gap attribution readable
-            spark.sparkContext.setJobDescription(f"r{k}:{name}")
-
-        def materialize(df: DataFrame) -> DataFrame:
-            """Cache a round-local frame; released at round end.
-
-            truncate_lineage=True (default): lazy localCheckpoint — the data
-            is cached exactly like persist, but every downstream consumer
-            plans against a flat LogicalRDD instead of re-carrying (and
-            re-analyzing, and re-shipping over py4j) the full logical tree
-            through the effective-frontier window. Blocks are freed
-            deterministically at round end via the persistent-RDD-id diff in
-            _release_round_blocks, so the historical objection (checkpoint
-            blocks freed only by GC -> erratic JVM memory pressure across
-            many rounds) no longer applies.
-
-            truncate_lineage=False: plain persist/unpersist — full lineage
-            kept for recompute-on-executor-loss deployments."""
-            if cfg.truncate_lineage:
-                df = df.localCheckpoint(eager=False)
-            else:
-                df = df.persist()
-            cached.append(df)
-            return df
-
-        # Robots TTL (round-4 verdict item #5): refresh rules BEFORE
-        # eligibility so this round already schedules under the new verdicts
-        # (simulator.py mirrors at the identical point in its run_round).
-        if (
-            cfg.robots_ttl_rounds > 0
-            and k > 0
-            and k % cfg.robots_ttl_rounds == 0
-            and self._robots_provider is not None
-        ):
+    def _run_round_impl(self, rc: _Round) -> dict:
+        # one method per phase; each rc.phase call labels the jobs that
+        # follow r<k>:<phase> and starts that phase's timer
+        cfg, k, ttl = self.cfg, rc.k, self.cfg.robots_ttl_rounds
+        if ttl > 0 and k > 0 and k % ttl == 0 and self._robots_provider is not None:
+            # Robots TTL (round-4 verdict item #5): refresh rules BEFORE
+            # eligibility so this round already schedules under the new
+            # verdicts (simulator.py mirrors at the identical point).
+            rc.phase("robots_refresh")
             self._refresh_robots(k)
-            tick("robots_refresh")
+        rc.phase("eligibility")
+        host_state, current, batch = self._schedule(rc)
+        pages_src = self.pages_idx
+        bound = self._next_round_bound
+        if cfg.small_round_threshold > 0 and cfg.broadcast_fetch and (
+            bound is not None and bound <= cfg.small_round_threshold
+        ):
+            rc.phase("small_probe")
+            batch, pages_src = self._small_probe(batch, pages_src)
+            if batch is None:
+                return self._finish_no_batch(rc, current)
+        # Empty-round fast path (round-3 ADVICE): while waiting out backoffs
+        # the batch is empty round after round, but the stats actions below
+        # still run the full fetch-join/explode/probe DAG (with
+        # broadcast_fetch=False that shuffles against the persisted corpus
+        # each time). After any empty round, probe cheaply FIRST — one
+        # limit(1) job over the already-persisted batch — and skip straight
+        # to the drained/empty-commit path. Non-empty rounds (the common
+        # case) never pay the extra job. (The small-round probe above
+        # already answered emptiness when it ran.)
+        elif self._prev_round_empty and batch.limit(1).count() == 0:
+            return self._finish_no_batch(rc, current)
 
+        rc.phase("fetch_parse_dedup_probe")
+        fetched = self._fetch_extract(rc, batch, pages_src)
+        flagged = self._flag_links(rc, fetched)
+        # TWO ordered stats actions per round (was one 3-branch union; round-5
+        # event-log profile): with the branches fused, AQE submits the
+        # independent shuffle stages CONCURRENTLY and the cheap counter
+        # branches race the heavy links chain for the same uncached `fetched`
+        # partitions — the losers hold task slots blocked on the BlockManager
+        # per-block lock (profiled: a 15.5 s stage wall carrying 4.5 core-s
+        # of work). Ordered actions keep every input of action 2 already
+        # cached by action 1, so nothing ever blocks:
+        #   1. the heavy chain alone — fetch join -> parse (python) fused
+        #      with explode/shuffle -> link dedup -> Bloom flag — one LINEAR
+        #      DAG (python parse overlaps JVM shuffle work task-pipelined,
+        #      the property the round-4 A/B measured as faster), returning
+        #      only the suspect bucket list;
+        #   2. the batch count + per-status fetch counters, pure cache scans.
+        suspect_buckets = self._suspect_buckets(flagged)
+        rc.phase("stats")
+        n = self._fetch_counts(batch, fetched)
+        if n.batch == 0:
+            return self._finish_no_batch(rc, current)
+        # Pin both known-side snapshots BEFORE the background seen append is
+        # submitted: the round's discovery reads a fixed file list and is
+        # immune to the in-flight commit landing mid-round (ADVICE r1 — the
+        # round stays deterministic by construction regardless of thread
+        # timing; this round's fetches are covered by the frontier side).
+        pins = (self.t["frontier"].current_snapshot_id(), self.t["seen"].current_snapshot_id())
+        futs = self._submit_fetch_commits(rc, batch, fetched, n)
+
+        rc.phase("discover")
+        new_rows, n_new, n_new_blocked = self._discover(rc, flagged, suspect_buckets, pins)
+        hs_delta = self._host_fold(rc, host_state, batch, fetched, new_rows, n.batch)
+
+        rc.phase("commit")
+        # bucketed append: keeps EVERY frontier file prunable by the
+        # known_loader backstop (an unpartitioned append would be
+        # conservatively re-read for every suspect bucket)
+        futs["frontier"] = rc.submit(self.t["frontier"], new_rows, "bucket")
+        # host_state delta append is independent of every other commit — run
+        # it in the pool too so the commit barrier is max(), not sum()
+        futs["host_state"] = rc.submit(self.t["host_state"], hs_delta)
+        return self._commit(rc, futs, n, n_new, n_new_blocked)
+
+    def _lazy_elapsed(self, k: int):
+        # virtual seconds from a host's asof_round to round k: the LAZY
+        # token refill's elapsed time (see _read_host_state)
+        return (F.lit(k) - F.col("asof_round")).cast("double") * F.lit(self.cfg.round_duration_s)
+
+    def _schedule(self, rc: _Round) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """Eligibility, politeness gates and token budgets -> (host_state
+        latest view, effective frontier, the round's cached fetch batch)."""
+        cfg, now_lit = self.cfg, F.lit(rc.now)
         # Eligibility only ever needs rows that can still become eligible —
         # archived terminal rows (bucket ≥ n_buckets since the last compact)
-        # are pruned file-level here; the dedup known-set below still reads
-        # them via the {b, b+n_buckets} partition pair.
+        # are pruned file-level here; the dedup known-set still reads them
+        # via the {b, b+n_buckets} partition pair.
         frontier = self._read_active_frontier()
-        trans = self.t["transitions"].read(spark)
+        trans = self.t["transitions"].read(self.spark)
         # one computation of the base/delta latest-wins view per round: the
         # eligibility join, the touched-host fold, and the new-domain
-        # anti-join all reuse the persisted result instead of re-running
-        # the split-read plan three times
-        jd("eligibility")
-        host_state = materialize(self._read_host_state())
+        # anti-join all reuse the cached result instead of re-running the
+        # split-read plan three times
+        host_state = rc.materialize(self._read_host_state())
 
-        # 1-2. eligibility + politeness gates (latest-wins over the delta) --
+        # eligibility + politeness gates (latest-wins over the delta) --
         # T5: expired failures re-enter (their next_fetch_ts was stamped
         # now+TTL at failure time); T10: stale fetched rows re-enter (stamped
         # now+staleness at fetch time). Both are plain predicates on columns
@@ -1164,16 +1252,13 @@ class Crawler:
             )
             .filter(F.col("blocked_until").isNull() | (F.col("blocked_until") <= now_lit))
         )
-        # 3. token-bucket budget -> skew-safe rank -------------------------
+        # token-bucket budget -> skew-safe rank ---------------------------
         # LAZY refill: tokens in host_state are as-of asof_round (the last
         # round that touched the host); refill covers the whole gap in one
         # capped step — exactly equal to per-round iteration (cap commutes,
         # see _read_host_state) — so untouched hosts never need a rewrite.
-        lazy_elapsed = (
-            (F.lit(k) - F.col("asof_round")).cast("double") * F.lit(cfg.round_duration_s)
-        )
         avail = refill_tokens(
-            F.col("tokens"), F.col("refill_rate"), lazy_elapsed, F.col("capacity")
+            F.col("tokens"), F.col("refill_rate"), self._lazy_elapsed(rc.k), F.col("capacity")
         )
         budget = F.floor(avail).cast("int")
         if self.budget_overrides is not None:  # W2: per-domain cap
@@ -1195,8 +1280,12 @@ class Crawler:
             "url", "url_hash", "bucket", "host", "registrable_domain",
             "priority", "next_fetch_ts", "attempt", "discovered_round",
         )
-        batch = materialize(batch)  # reused 4×
+        return host_state, current, rc.materialize(batch)  # batch is reused 4×
 
+    def _small_probe(self, batch: DataFrame, pages_src: DataFrame):
+        """Collect a small round's batch before any fetch plan exists ->
+        (batch as a local relation, fetch index pruned to its buckets), or
+        (None, None) when the batch is empty."""
         # Two-phase small rounds (round-4 floor cut): when the driver-side
         # active-row bound says everything still schedulable fits in a tiny
         # batch, collect the batch ITSELF (bounded ≤ threshold rows by the
@@ -1214,53 +1303,26 @@ class Crawler:
         # (per-round Catalyst analysis + codegen — round literals defeat the
         # plan cache), profiled at ~5.5 s for a 1-URL round; shrinking the
         # plans is the only lever that cost responds to. Heavy rounds (the
-        # common case mid-crawl) never take this branch and pay nothing.
-        pages_src = self.pages_idx
-        small = (
-            cfg.small_round_threshold > 0
-            and cfg.broadcast_fetch
-            and self._next_round_bound is not None
-            and self._next_round_bound <= cfg.small_round_threshold
-        )
-        if small:
-            # Round-trip next_fetch_ts as epoch MICROS, not TimestampType:
-            # Row conversion goes through the Python driver's LOCAL timezone
-            # (fromInternal/toInternal), and spark.sql.session.timeZone=UTC
-            # does not pin the driver process TZ — on a DST-observing host a
-            # ts in the fold-back hour could shift an hour and silently
-            # diverge engine-vs-simulator. Integer micros are exact.
-            batch_long = batch.withColumn(
-                "next_fetch_ts", F.unix_micros(F.col("next_fetch_ts"))
-            )
-            batch_schema = batch_long.schema
-            jd("small_probe")
-            batch_rows = batch_long.collect()
-            tick("small_probe")
-            if not batch_rows:
-                return self._finish_no_batch(k, t_start, cached, current)
-            batch = spark.createDataFrame(
-                batch_rows, schema=batch_schema
-            ).withColumn(
-                "next_fetch_ts", F.timestamp_micros(F.col("next_fetch_ts"))
-            )
-            pages_src = pages_src.filter(
-                F.col("__pbucket").isin(
-                    sorted({int(r["bucket"]) for r in batch_rows})
-                )
-            )
-        # Empty-round fast path (round-3 ADVICE): while waiting out backoffs
-        # the batch is empty round after round, but the combined stats action
-        # below still runs the full fetch-join/explode/probe DAG (with
-        # broadcast_fetch=False that shuffles against the persisted corpus
-        # each time). After any empty round, probe cheaply FIRST — one
-        # limit(1) job over the already-persisted batch — and skip straight
-        # to the drained/empty-commit path. Non-empty rounds (the common
-        # case) never pay the extra job. (The small-round histogram above
-        # already answered emptiness when it ran.)
-        elif self._prev_round_empty and batch.limit(1).count() == 0:
-            return self._finish_no_batch(k, t_start, cached, current)
+        # common case mid-crawl) never take this path and pay nothing.
+        # Round-trip next_fetch_ts as epoch MICROS, not TimestampType: Row
+        # conversion goes through the Python driver's LOCAL timezone
+        # (fromInternal/toInternal), and spark.sql.session.timeZone=UTC
+        # does not pin the driver process TZ — on a DST-observing host a ts
+        # in the fold-back hour could shift an hour and silently diverge
+        # engine-vs-simulator. Integer micros are exact.
+        batch_long = batch.withColumn("next_fetch_ts", F.unix_micros(F.col("next_fetch_ts")))
+        batch_rows = batch_long.collect()
+        if not batch_rows:
+            return None, None
+        batch = self.spark.createDataFrame(
+            batch_rows, schema=batch_long.schema
+        ).withColumn("next_fetch_ts", F.timestamp_micros(F.col("next_fetch_ts")))
+        buckets = sorted({int(r["bucket"]) for r in batch_rows})
+        return batch, pages_src.filter(F.col("__pbucket").isin(buckets))
 
-        # 4-5. fetch (simulated from the pages corpus) + extract -----------
+    def _fetch_extract(self, rc: _Round, batch: DataFrame, pages_src: DataFrame) -> DataFrame:
+        """Fetch (simulated from the pages corpus) + extract, cached."""
+        cfg = self.cfg
         if cfg.broadcast_fetch:
             hit = pages_src.join(F.broadcast(batch), "url_hash", "inner")
         else:
@@ -1295,16 +1357,14 @@ class Crawler:
         )
         if cfg.extract_entities:
             fetched = fetched.withColumn("embedded_json", F.col("page.embedded_json"))
-        fetched = fetched.drop("html", "page")
-        fetched = materialize(fetched)
-        ok = fetched.filter(F.col("fstatus") == "fetched")
-        failed_transient = fetched.filter(F.col("fstatus") == "transient")
-        missing = batch.join(fetched.select("url_hash"), "url_hash", "left_anti")
+        return rc.materialize(fetched.drop("html", "page"))
 
-        # Discovery candidates + Bloom flags, built before the stats action
-        # so the combined stats job below materializes link-dedup + probe in
-        # one pass over the just-cached fetch output.
-        exploded = ok.select(
+    def _flag_links(self, rc: _Round, fetched: DataFrame) -> DataFrame:
+        """Deduped out-links of the fetched pages with their Bloom verdict,
+        cached: the first stats action materializes link dedup + probe in
+        one pass over the just-cached fetch output."""
+        cfg = self.cfg
+        exploded = fetched.filter(F.col("fstatus") == "fetched").select(
             F.col("priority").alias("parent_priority"),
             F.col("url").alias("__parent_url"),
             F.explode("outlinks").alias("url"),
@@ -1327,30 +1387,20 @@ class Crawler:
             .groupBy("url_hash")
             .agg(F.max("parent_priority").alias("parent_priority"), F.min("url").alias("url"))
         )
-        flagged = materialize(flag_maybe_seen(links, self._bloom, spark))
+        return rc.materialize(flag_maybe_seen(links, self._bloom, self.spark))
 
-        # TWO ordered stats actions per round (was one 3-branch union; round-5
-        # event-log profile): with the branches fused, AQE submits the
-        # independent shuffle stages CONCURRENTLY and the cheap counter
-        # branches race the heavy links chain for the same uncached `fetched`
-        # partitions — the losers hold task slots blocked on the BlockManager
-        # per-block lock (profiled: a 15.5 s stage wall carrying 4.5 core-s
-        # of work). Ordered actions keep every input of action 2 already
-        # cached by action 1, so nothing ever blocks:
-        #   1. the heavy chain alone — fetch join -> parse (python) fused
-        #      with explode/shuffle -> link dedup -> Bloom flag — one LINEAR
-        #      DAG (python parse overlaps JVM shuffle work task-pipelined,
-        #      the property the round-4 A/B measured as faster), returning
-        #      only the suspect bucket list;
-        #   2. the batch count + per-status fetch counters, pure cache scans.
-        jd("fetch_parse_dedup_probe")
-        suspect_buckets = sorted(
+    def _suspect_buckets(self, flagged: DataFrame) -> list[int]:
+        """Stats action 1: the hash buckets holding Bloom-positive links."""
+        return sorted(
             int(r["bucket"])
             for r in flagged.filter(F.col("__maybe_seen"))
-            .select(bucket_expr(F.col("url_hash"), cfg.n_buckets).alias("bucket"))
+            .select(bucket_expr(F.col("url_hash"), self.cfg.n_buckets).alias("bucket"))
             .distinct()
             .collect()
         )
+
+    def _fetch_counts(self, batch: DataFrame, fetched: DataFrame) -> _FetchCounts:
+        """Stats action 2: batch count + per-status fetch counters."""
         b_stat = batch.agg(F.count("*").alias("n")).select(
             F.lit("batch").alias("tag"), F.lit("").alias("fstatus"),
             F.lit(-1).cast("int").alias("pid"), F.col("n").cast("long").alias("n"),
@@ -1366,35 +1416,29 @@ class Crawler:
                 F.coalesce(F.col("raw_links"), F.lit(0)).cast("long").alias("raw_links"),
             )
         )
-        jd("stats")
-        stat_rows = b_stat.unionByName(s_stat).collect()
-        tick("sched_fetch_probe")
-        n_batch = sum(r["n"] for r in stat_rows if r["tag"] == "batch")
-        if n_batch == 0:
-            # drained probe: when NO row can ever become eligible again the
-            # caller can stop immediately instead of counting empty rounds
-            # (and skip the bookkeeping commit — nothing changed, nothing
-            # will; resume replays the same empty round)
-            return self._finish_no_batch(k, t_start, cached, current)
-        stage_rows = [r for r in stat_rows if r["tag"] == "stage"]
-        n_ok = sum(r["n"] for r in stage_rows if r["fstatus"] == "fetched")
-        n_raw_links = sum(r["raw_links"] or 0 for r in stage_rows if r["fstatus"] == "fetched")
-        n_transient = sum(r["n"] for r in stage_rows if r["fstatus"] == "transient")
-        n_missing = n_batch - n_ok - n_transient
-        pool = ThreadPoolExecutor(max_workers=6)
+        n = _FetchCounts()
+        for r in b_stat.unionByName(s_stat).collect():
+            if r["tag"] == "batch":
+                n.batch += r["n"]
+                continue
+            ent = n.by_pid.setdefault(int(r["pid"]), [0, 0])
+            if r["fstatus"] == "fetched":
+                n.ok += r["n"]
+                n.raw_links += r["raw_links"] or 0
+                ent[0] += r["n"]
+            else:
+                n.transient += r["n"]
+                ent[1] += r["n"]
+        return n
 
-        def submit(name, fn, *args):
-            # job descriptions are thread-local: label inside the pool thread
-            def run():
-                jd(name)
-                return fn(*args)
-            return pool.submit(run)
-
-        # Results/seen appends depend only on `ok` (already checkpointed):
-        # start them NOW in background threads so the write overlaps the
-        # discovery stage. Spark schedules concurrent jobs fairly; each
-        # SnapshotTable commit is independent and atomic, and the rounds row
-        # (the resume barrier) is written only after every future resolves.
+    def _submit_fetch_commits(self, rc: _Round, batch: DataFrame, fetched: DataFrame,
+                              n: _FetchCounts) -> dict:
+        """Start the results, seen, transitions (and entities) appends."""
+        # They depend only on the cached fetch stage: started NOW in the
+        # commit pool, the writes overlap discovery. Spark schedules
+        # concurrent jobs fairly; each SnapshotTable commit is independent
+        # and atomic, and the rounds row (the resume barrier) is written
+        # only after every future resolves.
         # Delta appends inherit the cached fetch stage's partitioning (256
         # map partitions at the bench shape) and wrote one TINY file each —
         # every later read of the table then paid a per-file open/stat cost
@@ -1404,24 +1448,32 @@ class Crawler:
         # the driver from the stats action, so size the file count from them
         # (guide §6: output files in the 100 MB-1 GB band): ~15 KB/page row
         # -> 16k rows/file ≈ 250 MB; ~50 B/transition row -> 4M rows/file.
-        n_results_files = max(1, int(n_ok) // 16_384 + 1)
-        n_trans_files = max(1, int(n_batch) // 4_000_000 + 1)
+        n_results_files = n.ok // 16_384 + 1
+        ok = fetched.filter(F.col("fstatus") == "fetched")
         results_rows = ok.select(
             "url", "url_hash", "warc_ts",
             F.lit("fetched").alias("status"), "text", "lang",
-            F.lit(k).cast("int").alias("round"),
+            F.lit(rc.k).cast("int").alias("round"),
         ).coalesce(n_results_files)
-        seen_rows = ok.select("url_hash", "bucket", F.lit(now).alias("crawl_ts"))
-        # Pin both known-side snapshots BEFORE the background seen append is
-        # submitted: the round's discovery reads a fixed file list and is
-        # immune to the in-flight commit landing mid-round (ADVICE r1 — the
-        # round stays deterministic by construction regardless of thread
-        # timing; this round's fetches are covered by the frontier side).
-        seen_snap0 = self.t["seen"].current_snapshot_id()
-        frontier_snap0 = self.t["frontier"].current_snapshot_id()
-        # Frontier state transitions (section 7 semantically, built here so
-        # the append overlaps discovery — it depends only on the persisted
-        # fetch stage, like results/seen).
+        seen_rows = ok.select("url_hash", "bucket", F.lit(rc.now).alias("crawl_ts"))
+        trans_rows = self._transition_rows(rc, batch, fetched).coalesce(n.batch // 4_000_000 + 1)
+        futs = {
+            "results": rc.submit(self.t["results"], results_rows),
+            "seen": rc.submit(self.t["seen"], seen_rows, "bucket"),
+            "transitions": rc.submit(self.t["transitions"], trans_rows),
+        }
+        if self.cfg.extract_entities:
+            futs["entities"] = rc.submit(
+                self.t["entities"], self._entity_rows(rc, ok).coalesce(n_results_files)
+            )
+        return futs
+
+    def _transition_rows(self, rc: _Round, batch: DataFrame, fetched: DataFrame) -> DataFrame:
+        """One frontier state transition per scheduled URL."""
+        cfg, now = self.cfg, rc.now
+        ok = fetched.filter(F.col("fstatus") == "fetched")
+        failed_transient = fetched.filter(F.col("fstatus") == "transient")
+        missing = batch.join(fetched.select("url_hash"), "url_hash", "left_anti")
         give_up = F.col("attempt") + 1 >= cfg.max_attempts
         if cfg.staleness_s is not None:  # T10: stamp re-crawl due time
             fetched_nft = F.lit(now + dt.timedelta(seconds=cfg.staleness_s))
@@ -1429,7 +1481,7 @@ class Crawler:
         else:
             fetched_nft = F.col("next_fetch_ts")
             fetched_attempt = F.col("attempt")
-        backoff_nft = backoff_next_fetch_ts(now_lit, F.col("attempt"))
+        backoff_nft = backoff_next_fetch_ts(F.lit(now), F.col("attempt"))
         if cfg.failure_ttl_s is not None:  # T5: stamp expiry; attempts restart
             failed_nft = F.lit(now + dt.timedelta(seconds=cfg.failure_ttl_s))
             failed_attempt = F.lit(0).cast("int")
@@ -1461,65 +1513,66 @@ class Crawler:
                 )
             )
         )
-        trans_rows = changed.select(
+        return changed.select(
             "url_hash",
             F.col("new_state").alias("state"),
             F.col("new_nft").alias("next_fetch_ts"),
             F.col("new_attempt").alias("attempt"),
-            F.lit(k).cast("int").alias("round"),
+            F.lit(rc.k).cast("int").alias("round"),
             # verdict unchanged by state transitions; only the robots-TTL
             # refresh writes a non-null here
             F.lit(None).cast("boolean").alias("robots_allowed"),
-        ).coalesce(n_trans_files)
-        fut_results = submit("commit:results", self.t["results"].append, results_rows, {"round": k})
-        fut_seen = submit(
-            "commit:seen", self.t["seen"].append, seen_rows, {"round": k}, "bucket"
         )
-        fut_trans = submit("commit:transitions", self.t["transitions"].append, trans_rows, {"round": k})
-        fut_entities = None
-        if cfg.extract_entities:
-            # nested per-page entities: parse the embedded payload with an
-            # explicit schema (JVM from_json), keep comments NESTED as
-            # array<struct> — the reference's repo->issue->comments model
-            issue = F.element_at(
-                F.from_json("embedded_json", PAYLOAD_DDL)["payload"]["preloadedQueries"], 1
-            )["result"]["data"]["repository"]["issue"]
-            comments = F.transform(
-                F.filter(
-                    issue["frontTimelineItems"]["edges"],
-                    lambda e: e["node"]["__typename"] == "IssueComment",
-                ),
-                lambda e: F.struct(
-                    e["node"]["author"]["login"].alias("author"),
-                    F.to_timestamp(
-                        e["node"]["createdAt"], "yyyy-MM-dd'T'HH:mm:ss'Z'"
-                    ).alias("timestamp"),
-                    e["node"]["body"].alias("content"),
-                ),
-            )
-            # W4 inside the engine table: comments chronologically sorted
-            # (reference src/pr_scraper.py:721-722), JVM-side comparator
-            comments = F.array_sort(
-                comments,
-                lambda a, b: F.when(a["timestamp"] < b["timestamp"], -1)
-                .when(a["timestamp"] > b["timestamp"], 1)
-                .otherwise(0),
-            )
-            entities_rows = ok.filter(F.col("embedded_json").isNotNull()).select(
-                "url_hash",
-                "url",
-                F.lit(k).cast("int").alias("round"),
-                F.struct(
-                    issue["number"].alias("number"),
-                    issue["state"].alias("state"),
-                    comments.alias("comments"),
-                ).alias("issue"),
-            ).coalesce(n_results_files)
-            fut_entities = submit(
-                "commit:entities", self.t["entities"].append, entities_rows, {"round": k}
-            )
 
-        # 6. discovery: out-links -> new frontier rows ---------------------
+    def _entity_rows(self, rc: _Round, ok: DataFrame) -> DataFrame:
+        """Nested per-page entities from the embedded payload."""
+        # explicit schema (JVM from_json), comments kept NESTED as
+        # array<struct> — the reference's repo->issue->comments model
+        issue = F.element_at(
+            F.from_json("embedded_json", PAYLOAD_DDL)["payload"]["preloadedQueries"], 1
+        )["result"]["data"]["repository"]["issue"]
+        comments = F.transform(
+            F.filter(
+                issue["frontTimelineItems"]["edges"],
+                lambda e: e["node"]["__typename"] == "IssueComment",
+            ),
+            lambda e: F.struct(
+                e["node"]["author"]["login"].alias("author"),
+                F.to_timestamp(
+                    e["node"]["createdAt"], "yyyy-MM-dd'T'HH:mm:ss'Z'"
+                ).alias("timestamp"),
+                e["node"]["body"].alias("content"),
+            ),
+        )
+        # W4 inside the engine table: comments chronologically sorted
+        # (reference src/pr_scraper.py:721-722), JVM-side comparator
+        comments = F.array_sort(
+            comments,
+            lambda a, b: F.when(a["timestamp"] < b["timestamp"], -1)
+            .when(a["timestamp"] > b["timestamp"], 1)
+            .otherwise(0),
+        )
+        return ok.filter(F.col("embedded_json").isNotNull()).select(
+            "url_hash",
+            "url",
+            F.lit(rc.k).cast("int").alias("round"),
+            F.struct(
+                issue["number"].alias("number"),
+                issue["state"].alias("state"),
+                comments.alias("comments"),
+            ).alias("issue"),
+        )
+
+    def _discover(self, rc: _Round, flagged: DataFrame, suspect_buckets: list[int],
+                  pins: tuple) -> tuple[DataFrame, int, int]:
+        """Out-links -> (cached new frontier rows, n_new, n_new_blocked)."""
+        # links + probe verdicts were cached and their suspect buckets
+        # collected by the first stats action — discovery here is just the
+        # exact backstop over the pruned known-key files, read at the
+        # pinned (frontier, seen) snapshots
+        cfg, k = self.cfg, rc.k
+        frontier_snap0, seen_snap0 = pins
+
         def known_loader(buckets: list[int]) -> DataFrame:
             """Known keys (frontier ∪ seen) restricted to the given hash
             buckets — both tables are bucket-partitioned, so the backstop
@@ -1527,14 +1580,10 @@ class Crawler:
             archive partitions (terminal rows moved to bucket+n_buckets at
             compaction) are part of the known set, hence the pair."""
             both = list(buckets) + [b + cfg.n_buckets for b in buckets]
-            fr = self.t["frontier"].read_partitions(spark, "bucket", both, frontier_snap0)
-            sn = self.t["seen"].read_partitions(spark, "bucket", buckets, seen_snap0)
+            fr = self.t["frontier"].read_partitions(self.spark, "bucket", both, frontier_snap0)
+            sn = self.t["seen"].read_partitions(self.spark, "bucket", buckets, seen_snap0)
             return fr.select("url_hash").unionByName(sn.select("url_hash"))
 
-        # links + probe verdicts were cached and their suspect buckets
-        # collected inside the combined stats action above — discovery here
-        # is just the exact backstop over the pruned known-key files
-        jd("discover")
         fresh = resolve_unseen(flagged, known_loader, suspect_buckets)
         new_rows = (
             fresh.withColumn("bucket", bucket_expr(F.col("url_hash"), cfg.n_buckets))
@@ -1553,7 +1602,7 @@ class Crawler:
             .transform(self._with_robots_allowed)
             .select([f.name for f in FRONTIER_SCHEMA.fields])
         )
-        new_rows = materialize(new_rows)
+        new_rows = rc.materialize(new_rows)
         # Distributed incremental Bloom maintenance: per-bucket delta bitmaps
         # built executor-side, OR-merged on the driver — no collect() of raw
         # url_hashes, and the returned key count IS n_new (one job serves
@@ -1562,16 +1611,20 @@ class Crawler:
             new_rows.select("url_hash", "robots_allowed"),
             false_count_of="robots_allowed",
         )
-        tick("discover")
+        return new_rows, int(n_new), int(n_new_blocked)
 
-        # host_state fold: spend tokens, breaker — TOUCHED DOMAINS ONLY ----
-        # (round-3 verdict #3: the full-table overwrite was O(all domains
-        # ever seen) per round; at 10^7-10^8 registrable domains that is the
-        # same anti-pattern the frontier's transitions delta was built to
-        # avoid. A round now APPENDS one row per domain it scheduled — the
-        # only rows whose state changes beyond the lazy capped refill —
-        # plus rows for newly-discovered domains; _read_host_state resolves
-        # latest-wins and compact() folds the delta.)
+    def _host_fold(self, rc: _Round, host_state: DataFrame, batch: DataFrame,
+                   fetched: DataFrame, new_rows: DataFrame, n_batch: int) -> DataFrame:
+        """The round's host_state delta: touched and new domains only."""
+        # spend tokens, breaker — TOUCHED DOMAINS ONLY (round-3 verdict #3:
+        # the full-table overwrite was O(all domains ever seen) per round;
+        # at 10^7-10^8 registrable domains that is the same anti-pattern the
+        # frontier's transitions delta was built to avoid. A round APPENDS
+        # one row per domain it scheduled — the only rows whose state
+        # changes beyond the lazy capped refill — plus rows for newly-
+        # discovered domains; _read_host_state resolves latest-wins and
+        # compact() folds the delta.)
+        cfg, now_lit = self.cfg, F.lit(rc.now)
         # One tagged union + one aggregation instead of three per-frame
         # groupBys joined separately (r6: the old shape planned 9-18 little
         # broadcast/agg jobs inside every round's host_state commit). Every
@@ -1583,13 +1636,13 @@ class Crawler:
                 F.lit(1).alias("__att"), F.lit(0).alias("__fail"), F.lit(0).alias("__ok"),
             )
             .unionByName(
-                failed_transient.select(
+                fetched.filter(F.col("fstatus") == "transient").select(
                     "registrable_domain",
                     F.lit(0).alias("__att"), F.lit(1).alias("__fail"), F.lit(0).alias("__ok"),
                 )
             )
             .unionByName(
-                ok.select(
+                fetched.filter(F.col("fstatus") == "fetched").select(
                     "registrable_domain",
                     F.lit(0).alias("__att"), F.lit(0).alias("__fail"), F.lit(1).alias("__ok"),
                 )
@@ -1608,7 +1661,7 @@ class Crawler:
                 F.greatest(
                     F.lit(0.0),
                     refill_tokens(F.col("tokens"), F.col("refill_rate"),
-                                  lazy_elapsed, F.col("capacity"))
+                                  self._lazy_elapsed(rc.k), F.col("capacity"))
                     - F.col("attempted"),
                 )
             )
@@ -1623,81 +1676,39 @@ class Crawler:
                 ),
             )
         hs_touched = apply_circuit_breaker(hs_touched.drop("attempted"), now_lit)
-        hs_touched = hs_touched.withColumn("asof_round", F.lit(k).cast("int"))
+        hs_touched = hs_touched.withColumn("asof_round", F.lit(rc.k).cast("int"))
         # new domains discovered this round join host_state lazily
         new_domains = new_rows.select("registrable_domain").distinct().join(
             host_state.select("registrable_domain"), "registrable_domain", "left_anti"
         )
         # one ~100 B row per touched/new domain: a single file per round
         # keeps the per-round host_state latest-wins read O(few files)
-        # (bounded by n_batch domains; see the delta-file sizing note above)
-        hs_delta = hs_touched.select(*self.HOST_COLS).unionByName(
-            self._new_host_rows(new_domains, asof_round=k)
-        ).coalesce(max(1, int(n_batch) // 4_000_000 + 1))
+        # (bounded by n_batch domains; see _submit_fetch_commits)
+        return hs_touched.select(*self.HOST_COLS).unionByName(
+            self._new_host_rows(new_domains, asof_round=rc.k)
+        ).coalesce(n_batch // 4_000_000 + 1)
 
-        # ------------------------------------------------- commits (S7/T6)
-        tick("plan_updates")
-        # bucketed append: keeps EVERY frontier file prunable by the
-        # known_loader backstop (an unpartitioned append would be
-        # conservatively re-read for every suspect bucket)
-        fut_frontier = submit(
-            "commit:frontier", self.t["frontier"].append, new_rows, {"round": k}, "bucket"
-        )
-        # host_state delta append is independent of every other commit — run
-        # it in the pool too so the commit barrier is max(), not sum()
-        fut_host = submit("commit:host_state", self.t["host_state"].append, hs_delta, {"round": k})
-        host_snap = fut_host.result()
-        frontier_snap = fut_frontier.result()
-        transitions_snap = fut_trans.result()
-        results_snap = fut_results.result()
-        seen_snap = fut_seen.result()
-        entities_snap = (
-            fut_entities.result() if fut_entities is not None
-            else self.t["entities"].current_snapshot_id()
-        )
-        pool.shutdown()
-        tick("w_all")
-
-        wall_ms = int((time.monotonic() - t_start) * 1000)
-        # per-partition lineage assembled from the already-collected stage rows
-        by_pid: dict[int, list[int]] = {}
-        for r in stage_rows:
-            ent = by_pid.setdefault(int(r["pid"]), [0, 0])
-            if r["fstatus"] == "fetched":
-                ent[0] += int(r["n"])
-            else:
-                ent[1] += int(r["n"])
+    def _commit(self, rc: _Round, futs: dict, n: _FetchCounts, n_new: int,
+                n_new_blocked: int) -> dict:
+        """Await the table commits, record the round, advance the bounds."""
+        cfg = self.cfg
+        snaps = {name: f.result() for name, f in futs.items()}
+        if "entities" not in snaps:
+            snaps["entities"] = self.t["entities"].current_snapshot_id()
         # per-partition rows carry per-partition fetch/failure counts only;
-        # the GLOBAL dedup count (n_raw_links − n_new) is recorded exactly
-        # once on its own stage row — summing urls_deduped over a round now
+        # the GLOBAL dedup count (raw links − n_new) is recorded exactly
+        # once on its own stage row — summing urls_deduped over a round
         # gives the true number instead of overcounting by the partition
         # count (round-3 verdict #4)
-        metrics_snap = self.t["metrics"].append_local(
-            (
-                [
-                    (k, "fetch", pid, ent[0], 0, ent[1], wall_ms, frontier_snap)
-                    for pid, ent in sorted(by_pid.items())
-                ]
-                or [(k, "fetch", -1, 0, 0, 0, wall_ms, frontier_snap)]
-            )
-            + [(k, "dedup", -1, 0, int(n_raw_links) - n_new, 0, wall_ms, frontier_snap)],
-            METRICS_SCHEMA,
-            {"round": k},
+        counters = [("fetch", pid, ok, 0, bad) for pid, (ok, bad) in sorted(n.by_pid.items())]
+        counters = (counters or [("fetch", -1, 0, 0, 0)]) + [
+            ("dedup", -1, 0, n.raw_links - n_new, 0)
+        ]
+        wall_ms, phases = self._record_round(
+            rc, snaps, counters, (n.ok, n.transient + n.missing, n_new, n.batch)
         )
-        self.t["rounds"].append_local(
-            [
-                (
-                    k, True, n_ok, int(n_transient + n_missing), n_new, n_batch,
-                    wall_ms, frontier_snap, seen_snap, results_snap, host_snap,
-                    metrics_snap, transitions_snap, entities_snap,
-                )
-            ],
-            ROUNDS_SCHEMA,
-            {"round": k},
-        )
-        self._release_round_blocks(cached)
         # exactly one transition row per scheduled URL was appended
-        self._trans_rows += int(n_batch)
+        self._trans_rows += n.batch
         # Active-row bound maintenance: rows leave the schedulable set only
         # when their new state is terminal under the CURRENT config —
         # fetched is terminal unless staleness re-crawls (T10), missing->
@@ -1707,22 +1718,17 @@ class Crawler:
         # their robots-ALLOWED rows (blocked rows are never eligible and
         # would otherwise accumulate into the bound forever).
         if self._next_round_bound is not None:
-            gone = (int(n_ok) if cfg.staleness_s is None else 0) + (
-                int(n_missing) if cfg.failure_ttl_s is None else 0
+            gone = (n.ok if cfg.staleness_s is None else 0) + (
+                n.missing if cfg.failure_ttl_s is None else 0
             )
             self._next_round_bound = (
-                max(0, self._next_round_bound - gone)
-                + int(n_new) - int(n_new_blocked)
+                max(0, self._next_round_bound - gone) + n_new - n_new_blocked
             )
         self._prev_round_empty = False
-        out = {
-            "round": k, "eligible": n_batch, "fetched": n_ok,
-            "transient": n_transient, "missing": n_missing,
-            "links": int(n_raw_links), "new": n_new, "wall_ms": wall_ms,
-        }
-        if os.environ.get("SPARK_GRAFT_PROFILE"):
-            out["prof"] = prof
-        return out
+        return _round_result(
+            rc.k, wall_ms, eligible=n.batch, fetched=n.ok, transient=n.transient,
+            missing=n.missing, links=n.raw_links, new=n_new, phases=phases,
+        )
 
     def checkpoint_stats(self) -> DataFrame:
         """A6: checkpoint-statistics rollup over the rounds lineage table
@@ -1747,11 +1753,7 @@ class Crawler:
             log=None) -> list[dict]:
         """Run (or resume) the crawl to convergence; returns round stats."""
         if seeds is not None:
-            t_i = time.monotonic()
             self.init_frontier(seeds)
-            if os.environ.get("SPARK_GRAFT_PROFILE"):
-                print(f"  [prof] init_frontier {time.monotonic() - t_i:.2f}s",
-                      file=sys.stderr)
             start = 0
         else:
             start = self.resume_round()
@@ -1773,9 +1775,7 @@ class Crawler:
                 # (resume replays the same empty round), so the simulator
                 # mirror — which just runs the empty rounds out — reaches
                 # identical fetch/seen outcomes.
-                s = {"round": k, "eligible": 0, "fetched": 0, "transient": 0,
-                     "missing": 0, "links": 0, "new": 0, "wall_ms": 0,
-                     "drained": True}
+                s = _round_result(k, 0, drained=True)
                 stats.append(s)
                 if log:
                     log(s)
@@ -1809,9 +1809,5 @@ class Crawler:
                         t.expire_snapshots(keep_last=self.cfg.expire_snapshots_keep)
         # fold the transitions delta into the frontier so readers see final
         # states without replaying the delta (resume-safe: rollback restores)
-        t_c = time.monotonic()
         self.compact()
-        if os.environ.get("SPARK_GRAFT_PROFILE"):
-            print(f"  [prof] final compact {time.monotonic() - t_c:.2f}s",
-                  file=sys.stderr)
         return stats

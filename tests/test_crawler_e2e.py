@@ -149,6 +149,95 @@ def test_resume_without_bootstrap_ids_raises(spark, corpus, tmp_path):
         Crawler(spark, _cfg(tmp_path / "noboot"), pages, robots).resume_round()
 
 
+def test_failed_commit_waits_for_inflight_appends(spark, corpus, baseline, tmp_path):
+    """A round commit that raises while another commit's append job is
+    still running: run_round re-raises the original error only after that
+    job finished and the round's checkpoint blocks are freed, and resume
+    from the surviving state reaches the clean crawl's outcome."""
+    import threading
+    import time
+
+    import pandas as pd
+
+    pages, seeds, robots = corpus
+    c = Crawler(spark, _cfg(tmp_path / "fault"), pages, robots)
+    c.init_frontier(seeds)
+    c.run_round(0)
+
+    @F.pandas_udf("string")
+    def slow(s: pd.Series) -> pd.Series:
+        time.sleep(3.0)
+        return s
+
+    results_started = threading.Event()
+    real_results_append = c.t["results"].append
+
+    def slow_results_append(df, *args):
+        results_started.set()
+        return real_results_append(df.withColumn("text", slow("text")), *args)
+
+    def failing_host_append(df, *args):
+        results_started.wait(60)
+        time.sleep(0.5)  # the results append job is running now
+        raise RuntimeError("host_state commit failed")
+
+    c.t["results"].append = slow_results_append
+    c.t["host_state"].append = failing_host_append
+    jsc = spark.sparkContext._jsc
+    pinned_before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with pytest.raises(RuntimeError, match="host_state commit failed"):
+        c.run_round(1)
+    # the status store is fed asynchronously: drain it, then no job may be
+    # left running (a still-running append would read freed blocks)
+    jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == pinned_before
+
+    resumed = Crawler(spark, _cfg(tmp_path / "fault"), pages, robots)
+    assert resumed.resume_round() == 1
+    resumed.run(seeds=None)
+    assert _crawl_outcome(spark, resumed) == baseline
+
+
+def test_failed_bootstrap_waits_for_inflight_commits(spark, corpus, tmp_path, monkeypatch):
+    """init_frontier's Bloom fold raising while the host_state bootstrap
+    still reads the cached seed frame: the error surfaces only after that
+    commit finished, so no job outlives the call."""
+    import threading
+    import time
+
+    import pandas as pd
+
+    from gh_crawler_spark.operators.dedup import PartitionedBloom
+
+    pages, seeds, robots = corpus
+    c = Crawler(spark, _cfg(tmp_path / "bootfault"), pages, robots)
+
+    @F.pandas_udf("string")
+    def slow(s: pd.Series) -> pd.Series:
+        time.sleep(3.0)
+        return s
+
+    host_started = threading.Event()
+    real_overwrite = c.t["host_state"].overwrite
+
+    def slow_overwrite(df, *args):
+        host_started.set()
+        return real_overwrite(df.withColumn("robots_rules", slow("robots_rules")), *args)
+
+    def failing_add_df(self, *args, **kwargs):
+        host_started.wait(60)
+        time.sleep(0.5)  # the host_state overwrite job is running now
+        raise RuntimeError("bloom fold failed")
+
+    c.t["host_state"].overwrite = slow_overwrite
+    monkeypatch.setattr(PartitionedBloom, "add_df", failing_add_df)
+    with pytest.raises(RuntimeError, match="bloom fold failed"):
+        c.init_frontier(seeds)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+
+
 def test_parallelism_invariance(spark, corpus, baseline, tmp_path):
     """Same outcome at different shuffle parallelism (N vs 4N analog):
     the baseline ran at 8 shuffle partitions; rerun at 2."""
@@ -335,9 +424,8 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
     disabling it entirely (threshold=0) must give the identical crawl, and
     (b) on an armed run the driver-side active-row bound must never
     under-predict a round's scheduled batch, and the bucket pre-probe must
-    actually fire (prof carries small_probe)."""
+    actually fire (the round's phases include small_probe)."""
     import dataclasses
-    import os
 
     pages, seeds, robots = corpus
     cfg_off = dataclasses.replace(_cfg(tmp_path / "sroff"), small_round_threshold=0)
@@ -351,18 +439,14 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
     def rr(k):
         bound = on._next_round_bound
         s = orig_rr(k)
-        checks.append((bound, s["eligible"], s.get("prof", {})))
+        checks.append((bound, s["eligible"], s["phases"]))
         return s
 
     on.run_round = rr
-    os.environ["SPARK_GRAFT_PROFILE"] = "1"
-    try:
-        on.run(seeds=seeds)
-    finally:
-        del os.environ["SPARK_GRAFT_PROFILE"]
+    on.run(seeds=seeds)
     assert _crawl_outcome(spark, on) == baseline
     assert all(b is None or elig <= b for b, elig, _ in checks)
-    assert any("small_probe" in prof for _, _, prof in checks)
+    assert any("small_probe" in phases for _, _, phases in checks)
 
 
 def test_entities_nested_table(spark, corpus, tmp_path):
@@ -457,14 +541,25 @@ def test_midcrawl_compaction_archives_terminal_rows(spark, corpus, baseline, tmp
 
 
 def test_lineage_recorded(spark, corpus, tmp_path):
+    from perfbench.tracing import PHASES
+
     pages, seeds, robots = corpus
     c = Crawler(spark, _cfg(tmp_path / "lin"), pages, robots)
-    c.run(seeds=seeds, max_rounds=3)
+    stats = c.run(seeds=seeds, max_rounds=3)
     rounds = c.t["rounds"].read(spark).orderBy("round").collect()
     assert [r["round"] for r in rounds] == [0, 1, 2]
     assert all(r["completed"] for r in rounds)
     metrics = c.t["metrics"].read(spark)
     assert metrics.filter(F.col("stage") == "fetch").count() >= 1
+    # the always-on trace: one stage row per phase the round ran, named in
+    # the vocabulary the benchmark's per-phase metrics read, summing to the
+    # round's wall time (each row rounds to whole ms)
+    trace = metrics.filter(~F.col("stage").isin("fetch", "dedup")).collect()
+    for r, s in zip(rounds, stats):
+        rows = {t["stage"]: t["wall_ms"] for t in trace if t["round"] == r["round"]}
+        assert rows == s["phases"]
+        assert set(rows) <= set(PHASES) | {"robots_refresh"}
+        assert abs(sum(rows.values()) - r["wall_ms"]) <= len(rows)
     # snapshot ids recorded per round are readable (time travel)
     for r in rounds:
         assert c.t["results"].read(spark, r["results_snap"]) is not None
