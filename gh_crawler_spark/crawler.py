@@ -217,14 +217,17 @@ class CrawlConfig:
     # active-row bound (seeds − rows gone terminal + rows discovered; a
     # TRUE upper bound on anything still schedulable, see run_round tail)
     # is at or under this, the round first collects the scheduled batch's
-    # bucket histogram — one tiny job over the about-to-be-persisted batch.
-    # Empty rounds then exit before the fetch/probe DAG is even built, and
-    # tiny rounds prune the cached fetch index to the batch's buckets (the
-    # index is range-clustered by __pbucket, so in-memory batch min/max
-    # stats skip everything else without decompressing html). A real fetch
-    # costs O(batch); with this the simulated one does too. Correctness
-    # never depends on the bound: pruning always uses the batch's OWN
-    # buckets. 0 disables (single combined action, no pre-probe).
+    # bucket histogram — one tiny JVM job that materializes the cached
+    # batch. Empty rounds then exit before the fetch/probe DAG is even
+    # built, and tiny rounds prune the cached fetch index to the batch's
+    # buckets (the index is range-clustered by __pbucket, so in-memory
+    # batch min/max stats skip everything else without decompressing html)
+    # and coalesce it to at most min(cores, batch rows) partitions, so the
+    # parse stage starts that many Python-worker tasks instead of 8× cores.
+    # A real fetch costs O(batch); with this the simulated one does too.
+    # Correctness never depends on the bound: pruning always uses the
+    # batch's OWN buckets. 0 disables (single combined action, no
+    # pre-probe; the fetch keeps the index's 8× cores partitions).
     # Robots-disallowed rows — 'discovered' forever but never eligible —
     # are EXCLUDED from the bound (their count rides in the Bloom-fold
     # job), so a blocked-heavy corpus does not disarm the tail fast path.
@@ -438,7 +441,8 @@ class _Round:
         # frames are freed by diffing pinned RDD ids against the round-start
         # baseline — the deterministic release that makes lineage truncation
         # memory-safe across long crawls. Long-lived caches (the fetch
-        # index, resume-time reads) predate the round and are never in it.
+        # index, the robots dim, resume-time reads) predate the round and
+        # are never in it.
         for df in self.cached:
             df.unpersist(blocking=False)
         if self.base_rdd_ids is not None:
@@ -563,7 +567,15 @@ class Crawler:
         # small-round two-phase path; set by init_frontier (seed count) and
         # resume_round (_count_active_rows). None = unknown -> disabled.
         self._next_round_bound: int | None = None
-        self.robots = robots
+        # The robots dim is read by init_frontier, by every round's
+        # discovery (_with_robots_allowed) and host_state fold
+        # (_new_host_rows): pinned once per Crawler like the fetch index, so
+        # those jobs read cached blocks instead of re-evaluating its source
+        # (a Python-row frame costs Python-worker tasks in every job). The
+        # pre-round block in run_round materializes it; a robots-TTL refresh
+        # swaps in a new dim, which the next round pins in turn.
+        self.robots = robots.persist() if robots is not None else None
+        self._robots_pinned: DataFrame | None = None
         # Last round scheduled nothing -> next round probes batch emptiness
         # cheaply before running the full stats DAG (empty-round fast path)
         self._prev_round_empty = False
@@ -1120,18 +1132,24 @@ class Crawler:
 
     # ----------------------------------------------------------------- round
     def run_round(self, k: int) -> dict:
+        # Crawl-lifetime caches are materialized BEFORE _Round takes its
+        # pinned-RDD baseline (ADVICE r5, medium): persist() registers an RDD
+        # id only at first PHYSICAL execution, so a cache first filled
+        # inside a round would look round-local to the release diff and be
+        # silently unpersisted, re-evaluating its source in every later job.
         if self.cfg.truncate_lineage and not self._pages_idx_forced:
-            # ADVICE r5 (medium): persist() registers its RDD id only at
-            # first PHYSICAL execution — if the long-lived fetch-index cache
-            # first materializes inside this round's fetch join, the
-            # round-end persistent-RDD-id diff would classify it as
-            # round-local and silently unpersist it, recomputing the corpus
-            # pipeline on every later round's scan (crawl.py / e2e entry
-            # points; bench.py pre-forces it with a count). Materialize it
-            # BEFORE the round's base snapshot, once per crawler — a
-            # cache-only scan when a caller already forced it.
+            # the fetch index; a cache-only scan when a caller already
+            # forced it (bench.py does, with a count)
             self.pages_idx.count()
             self._pages_idx_forced = True
+        if self.robots is not None and self.robots is not self._robots_pinned:
+            # the robots dim: once per Crawler, and once more after each
+            # robots-TTL refresh that replaced it (the superseded dim is
+            # released first — an equal plan shares its cache entry)
+            if self._robots_pinned is not None:
+                self._robots_pinned.unpersist()
+            self.robots = self._robots_pinned = self.robots.persist()
+            self.robots.count()
         with _Round(self, k) as rc:
             return self._run_round_impl(rc)
 
@@ -1153,8 +1171,8 @@ class Crawler:
             bound is not None and bound <= cfg.small_round_threshold
         ):
             rc.phase("small_probe")
-            batch, pages_src = self._small_probe(batch, pages_src)
-            if batch is None:
+            pages_src = self._small_probe(batch, pages_src)
+            if pages_src is None:
                 return self._finish_no_batch(rc, current)
         # Empty-round fast path (round-3 ADVICE): while waiting out backoffs
         # the batch is empty round after round, but the stats actions below
@@ -1282,43 +1300,35 @@ class Crawler:
         )
         return host_state, current, rc.materialize(batch)  # batch is reused 4×
 
-    def _small_probe(self, batch: DataFrame, pages_src: DataFrame):
-        """Collect a small round's batch before any fetch plan exists ->
-        (batch as a local relation, fetch index pruned to its buckets), or
-        (None, None) when the batch is empty."""
+    def _small_probe(self, batch: DataFrame, pages_src: DataFrame) -> DataFrame | None:
+        """Collect a small round's bucket histogram before any fetch plan
+        exists -> the fetch index pruned to the batch's buckets and sized to
+        the batch, or None when the batch is empty."""
         # Two-phase small rounds (round-4 floor cut): when the driver-side
         # active-row bound says everything still schedulable fits in a tiny
-        # batch, collect the batch ITSELF (bounded ≤ threshold rows by the
-        # same driver-tracked bound that armed the path) BEFORE the
-        # fetch/probe DAG exists. Empty rounds exit immediately; tiny rounds
-        # (a) prune the range-clustered cached corpus to the batch's own
-        # buckets — in-memory batch min/max stats then skip every other
-        # cached partition, so a 1-URL tail round costs O(batch) instead of
-        # O(corpus) (a real network fetch is O(batch); the simulation was
-        # the one place LESS scalable than reality) — and (b) rebuild the
-        # batch as a LocalRelation, which collapses every downstream plan
-        # that references it (broadcast fetch join, missing anti-join,
-        # per-host fold, transition rows) to a trivial local node. Tail
-        # rounds are dominated by parallelism-independent DRIVER cost
-        # (per-round Catalyst analysis + codegen — round literals defeat the
-        # plan cache), profiled at ~5.5 s for a 1-URL round; shrinking the
-        # plans is the only lever that cost responds to. Heavy rounds (the
-        # common case mid-crawl) never take this path and pay nothing.
-        # Round-trip next_fetch_ts as epoch MICROS, not TimestampType: Row
-        # conversion goes through the Python driver's LOCAL timezone
-        # (fromInternal/toInternal), and spark.sql.session.timeZone=UTC
-        # does not pin the driver process TZ — on a DST-observing host a ts
-        # in the fold-back hour could shift an hour and silently diverge
-        # engine-vs-simulator. Integer micros are exact.
-        batch_long = batch.withColumn("next_fetch_ts", F.unix_micros(F.col("next_fetch_ts")))
-        batch_rows = batch_long.collect()
-        if not batch_rows:
-            return None, None
-        batch = self.spark.createDataFrame(
-            batch_rows, schema=batch_long.schema
-        ).withColumn("next_fetch_ts", F.timestamp_micros(F.col("next_fetch_ts")))
-        buckets = sorted({int(r["bucket"]) for r in batch_rows})
-        return batch, pages_src.filter(F.col("__pbucket").isin(buckets))
+        # batch, one small job over the cached batch — it materializes the
+        # checkpoint every later phase reads — returns its rows per hash
+        # bucket BEFORE the fetch/probe DAG exists. Empty rounds exit
+        # immediately; tiny rounds (a) prune the range-clustered cached
+        # corpus to the batch's own buckets — in-memory batch min/max stats
+        # then skip every other cached partition, so a 1-URL tail round
+        # costs O(batch) instead of O(corpus) (a real network fetch is
+        # O(batch); the simulation was the one place LESS scalable than
+        # reality) — and (b) coalesce the pruned index to at most
+        # min(cores, batch rows) partitions. The fetch-join partitioning is
+        # the parse stage's, and every parse task pays a Python worker's
+        # fixed start-up; the 8× wave packing of the cached index only pays
+        # off on big rounds. The batch itself stays the cached JVM frame;
+        # under truncate_lineage every downstream plan sees it as a flat
+        # checkpointed leaf.
+        per_bucket = batch.groupBy("bucket").count().collect()
+        if not per_bucket:
+            return None
+        n_rows = sum(int(r["count"]) for r in per_bucket)
+        parts = min(self.spark.sparkContext.defaultParallelism, n_rows)
+        return pages_src.filter(
+            F.col("__pbucket").isin(sorted(int(r["bucket"]) for r in per_bucket))
+        ).coalesce(parts)
 
     def _fetch_extract(self, rc: _Round, batch: DataFrame, pages_src: DataFrame) -> DataFrame:
         """Fetch (simulated from the pages corpus) + extract, cached."""

@@ -39,6 +39,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A DataFrame of ``schema`` with no rows, planned as a JVM local
+    relation: reading it runs no task. ``spark.createDataFrame([], schema)``
+    is a PythonRDD with defaultParallelism empty partitions instead, so
+    every job that reads it starts that many Python-worker tasks."""
+    jss = spark._jsparkSession
+    return DataFrame(
+        jss.createDataFrame(spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())),
+        spark,
+    )
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -411,7 +423,7 @@ class SnapshotTable:
         if snap is None or not snap.files:
             if snap is not None:
                 schema = T.StructType.fromJson(json.loads(snap.schema_json))
-                return spark.createDataFrame([], schema)
+                return empty_frame(spark, schema)
             raise ValueError(f"table {self.name} has no snapshot yet")
         paths = [f["path"] for f in snap.files]
         # Explicit schema from the manifest: skips the per-read parquet
@@ -445,7 +457,7 @@ class SnapshotTable:
             or f["partition"][partition_by] in wanted
         ]
         if not paths:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         return spark.read.schema(schema).parquet(*paths)
 
     def split_base_delta(
@@ -483,7 +495,7 @@ class SnapshotTable:
         base_df = (
             spark.read.schema(schema).parquet(*base_kept)
             if base_kept
-            else spark.createDataFrame([], schema)
+            else empty_frame(spark, schema)
         )
         delta_df = (
             spark.read.schema(schema).parquet(*delta_paths) if delta_paths else None

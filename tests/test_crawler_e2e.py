@@ -424,7 +424,11 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
     disabling it entirely (threshold=0) must give the identical crawl, and
     (b) on an armed run the driver-side active-row bound must never
     under-predict a round's scheduled batch, and the bucket pre-probe must
-    actually fire (the round's phases include small_probe)."""
+    actually fire (the round's phases include small_probe). (c) An armed
+    round keeps Python workers to what its UDFs need: the parse stage runs
+    at most min(cores, batch rows) partitions (the metrics table's fetch
+    rows carry one partition_id per fetch partition), and the batch the
+    fetch joins is a JVM frame, not one rebuilt from Python rows."""
     import dataclasses
 
     pages, seeds, robots = corpus
@@ -435,18 +439,35 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
 
     on = Crawler(spark, _cfg(tmp_path / "sron"), pages, robots)
     orig_rr, checks = on.run_round, []
+    orig_fetch, batch_lineage = on._fetch_extract, []
 
     def rr(k):
         bound = on._next_round_bound
         s = orig_rr(k)
-        checks.append((bound, s["eligible"], s["phases"]))
+        checks.append((k, bound, s["eligible"], s["phases"]))
         return s
 
+    def fetch(rc, batch, pages_src):
+        batch_lineage.append(batch._jdf.queryExecution().toRdd().toDebugString())
+        return orig_fetch(rc, batch, pages_src)
+
     on.run_round = rr
+    on._fetch_extract = fetch
     on.run(seeds=seeds)
     assert _crawl_outcome(spark, on) == baseline
-    assert all(b is None or elig <= b for b, elig, _ in checks)
-    assert any("small_probe" in phases for _, _, phases in checks)
+    assert all(b is None or elig <= b for _, b, elig, _ in checks)
+    armed = [(k, elig) for k, _, elig, phases in checks if "small_probe" in phases]
+    assert armed
+    fetch_rows = (
+        on.t["metrics"].read(spark)
+        .filter((F.col("stage") == "fetch") & (F.col("partition_id") >= 0))
+        .groupBy("round").agg(F.countDistinct("partition_id").alias("n"))
+        .collect()
+    )
+    parts = {r["round"]: r["n"] for r in fetch_rows}
+    cores = spark.sparkContext.defaultParallelism
+    assert all(parts.get(k, 0) <= min(cores, elig) for k, elig in armed)
+    assert batch_lineage and not any("PythonRDD" in s for s in batch_lineage)
 
 
 def test_entities_nested_table(spark, corpus, tmp_path):
@@ -784,6 +805,10 @@ def test_robots_ttl_flip_matches_simulator(spark, corpus, tmp_path):
     hot_rounds = [rnd for rnd, uh in fetch_sets if uh in hot_hashes]
     assert hot_rounds, "flip never admitted the blocked domain"
     assert min(hot_rounds) >= 3
+    # the round after the refresh pinned the new dim and released the
+    # superseded one
+    assert c.robots is robots and robots.storageLevel.useMemory
+    assert not robots_v1.storageLevel.useMemory
 
 
 def test_robots_ttl_noop_when_rules_unchanged(spark, corpus, baseline, tmp_path):

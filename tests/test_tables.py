@@ -2,6 +2,7 @@
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gh_crawler_spark.tables import SnapshotTable
 
@@ -131,6 +132,25 @@ def test_empty_read_keeps_schema(spark, tmp_path):
     df = t.read(spark)
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["k", "v"]
+
+
+def test_empty_reads_start_no_python_tasks(spark, tmp_path):
+    """An empty snapshot reads as a typed frame with no Python partitions:
+    every round reads such tables (transitions after init or compact, seen
+    before the first fetch), and a PythonRDD there costs a Python-worker
+    task per partition in each job that reads it."""
+    ddl = "url_hash BIGINT, bucket INT, crawl_ts TIMESTAMP"
+    t = SnapshotTable(str(tmp_path), "seen")
+    t.init_empty(ddl)
+    frames = [
+        t.read(spark),
+        t.read_partitions(spark, "bucket", [0, 1]),
+        t.split_base_delta(spark)[0],
+    ]
+    for df in frames:
+        assert df.schema == T.StructType.fromDDL(ddl)
+        assert df.count() == 0
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
 
 
 def test_compact_small_files_binpacks_hot_partitions(spark, tmp_path):

@@ -2,10 +2,25 @@
 
 Parses one Spark event log (spark.eventLog.enabled=true) and reports:
 
-  1. PER-DESCRIPTION WALL — merged job wall and job count for each job
-     description. The crawler labels its jobs ``r<k>:<phase>``
-     (eligibility / small_probe / fetch_parse_dedup_probe / stats /
-     discover / commit:<table>), ``init_frontier`` and ``compact``.
+  1. PER-DESCRIPTION WALL — merged job wall, job count and Python-worker
+     tasks for each job description. The crawler labels its jobs
+     ``r<k>:<phase>`` (eligibility / small_probe / fetch_parse_dedup_probe /
+     stats / discover / commit:<table>), ``init_frontier`` and ``compact``;
+     the Python-worker tasks are also totalled per round ``r<k>``. A stage's
+     tasks count as Python-worker tasks when its RDD lineage (``RDD Info``)
+     holds a ``PythonRDD`` or an ``ArrowEvalPython`` /
+     ``FlatMapGroupsInPandas`` / ``MapInPandas`` scope; through a union,
+     only the partitions of its Python inputs count. The walk stops at a
+     persisted or checkpointed RDD that an earlier stage already computed:
+     a stage that reads a cached frame lists that frame's ancestors too,
+     but its tasks read the cached blocks. The count is still an UPPER
+     bound: a stage with a Python input counts every partition it runs
+     (a join or coalesce over one Python side, say), and an ancestor
+     listed under a cache that a concurrent stage is still filling is
+     counted. Each Python-worker task pays a fixed worker set-up cost
+     (about 0.25 s of slot time on a 4-vCPU host; CLAUDE.md), so
+     on small rounds count these tasks, not UDF time, when sizing a change
+     at the Python boundary.
   2. DRIVER GAPS — wall intervals with no job running (Catalyst analysis,
      file listing, py4j round-trips, manifest IO), totalled and listed by
      the description of the job that starts at the gap's end.
@@ -26,13 +41,49 @@ import collections
 import json
 import sys
 
+PYTHON_SCOPES = ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas")
+
+
+def python_tasks(stage_info: dict, computed: set[int]) -> int:
+    """How many of a stage's partitions run Python-worker work: walk its
+    RDD lineage from the stage's last RDD, not below a persisted RDD in
+    ``computed`` (the ones earlier completed stages already materialized).
+    A UnionRDD adds up its inputs' Python partitions and a one-to-one RDD
+    (one input, as many partitions) keeps its input's; any other RDD with
+    a Python input counts all of its partitions."""
+    rdds = {r["RDD ID"]: r for r in stage_info.get("RDD Info", [])}
+    memo: dict[int, int] = {}
+
+    def parts(i: int) -> int:
+        if i not in rdds or i in computed:
+            return 0
+        if i not in memo:
+            r = rdds[i]
+            n = r.get("Number of Partitions", 0)
+            scope = json.loads(r.get("Scope") or "{}").get("name")
+            ins = r.get("Parent IDs", [])
+            if r.get("Name") == "PythonRDD" or scope in PYTHON_SCOPES:
+                memo[i] = n
+            elif r.get("Name") == "UnionRDD" or (
+                len(ins) == 1 and rdds.get(ins[0], {}).get("Number of Partitions") == n
+            ):
+                memo[i] = min(n, sum(parts(p) for p in ins))
+            else:
+                memo[i] = n if any(parts(p) for p in ins) else 0
+        return memo[i]
+
+    parents = {p for r in rdds.values() for p in r.get("Parent IDs", [])}
+    return max((parts(i) for i in rdds if i not in parents), default=0)
+
 
 def parse(path: str) -> tuple[list[dict], dict[int, dict]]:
     """Completed jobs (start, end, desc) sorted by start, and per-stage task
-    accounting, from one pass over the event log."""
+    accounting (with the submitting job's description and how many of the
+    stage's partitions run Python), from one pass over the event log."""
     jobs: dict[int, dict] = {}
+    computed: set[int] = set()  # persisted RDDs that a completed stage computed
     stages: dict[int, dict] = collections.defaultdict(
-        lambda: {"task_ms": 0, "max_task": 0, "n_tasks": 0}
+        lambda: {"task_ms": 0, "max_task": 0, "n_tasks": 0, "py_parts": 0, "desc": "?"}
     )
     with open(path, encoding="utf-8") as f:
         for line in f:
@@ -50,8 +101,17 @@ def parse(path: str) -> tuple[list[dict], dict[int, dict]]:
                 j = jobs.get(ev["Job ID"])
                 if j is not None:
                     j["end"] = ev["Completion Time"]
+            elif e == "SparkListenerStageSubmitted":
+                si = ev["Stage Info"]
+                st = stages[si["Stage ID"]]
+                st["py_parts"] = python_tasks(si, computed)
+                st["desc"] = (ev.get("Properties") or {}).get("spark.job.description", "?")
             elif e == "SparkListenerStageCompleted":
                 si = ev["Stage Info"]
+                computed |= {
+                    r["RDD ID"] for r in si.get("RDD Info", [])
+                    if any((r.get("Storage Level") or {}).get(k) for k in ("Use Memory", "Use Disk"))
+                }
                 st = stages[si["Stage ID"]]
                 st["name"] = si["Stage Name"]
                 end = si.get("Completion Time", 0)
@@ -89,14 +149,25 @@ def main(path: str, slots: int) -> None:
     by = collections.defaultdict(list)
     for j in done:
         by[j["desc"]].append((j["start"], j["end"]))
+    py_tasks = collections.Counter()
+    for st in stages.values():
+        py_tasks[st["desc"]] += min(st["py_parts"], st["n_tasks"])
     rows = sorted(
         ((sum(b - a for a, b in merge(iv)) / 1000.0, len(iv), desc) for desc, iv in by.items()),
         reverse=True,
     )
     print(f"app wall (first job start -> last job end): {total:.1f}s\n")
-    print(f"{'wall_s':>8} {'jobs':>5}  description")
+    print(f"{'wall_s':>8} {'jobs':>5} {'py_tasks':>8}  description")
     for wall, n, desc in rows[:40]:
-        print(f"{wall:8.2f} {n:5d}  {desc[:100]}")
+        print(f"{wall:8.2f} {n:5d} {py_tasks[desc]:8d}  {desc[:100]}")
+    per_round = collections.Counter()
+    for desc, n in py_tasks.items():
+        head = desc.split(":", 1)[0]
+        if head[:1] == "r" and head[1:].isdigit():
+            per_round[head] += n
+    print("\nPython-worker tasks per round (upper bound): " + (", ".join(
+        f"{r}={n}" for r, n in sorted(per_round.items(), key=lambda kv: int(kv[0][1:])))
+        or "none"))
 
     gaps = []  # (duration_ms, offset_ms, description of the next job)
     for (_, prev_end), (start, _) in zip(busy, busy[1:]):
