@@ -72,6 +72,26 @@ from gh_crawler_spark.tables import SnapshotTable
 
 EPOCH = dt.datetime(2024, 6, 1, 0, 0, 0)
 
+# URL-seen Bloom sizing, shared by the seed-time empty filter and resume's
+# rebuild: BLOOM_EXPECTED_KEYS keys spread over the frontier's hash buckets.
+BLOOM_EXPECTED_KEYS = 2_000_000
+BLOOM_FPP = 0.01
+
+# The per-round eligibility join broadcasts the transitions-latest view while
+# the delta holds at most this many rows (tracked driver-side: exactly
+# n_batch rows append per round, reset by compact()). The delta is orders of
+# magnitude smaller than the frontier between compactions, so the explicit
+# hint spares the frontier side its shuffle WRITE — AQE's late SMJ->BHJ
+# conversion only skips the exchange read. Past the bound the join falls
+# back to AQE's runtime choice, the right behavior when a 10^10-row crawl
+# lets the delta grow huge.
+BROADCAST_TRANSITIONS_MAX_ROWS = 2_000_000
+
+# A broadcast-mode round whose measured batch is at most this many rows
+# coalesces its fetch index to min(cores, batch rows) partitions
+# (Crawler._probe_batch).
+SMALL_ROUND_ROWS = 5000
+
 
 def _scan_java_only_regex(pat: str) -> str | None:
     """Return a description of the first Java-regex-only construct in
@@ -135,9 +155,7 @@ class CrawlConfig:
     n_salts: int = 16              # W1 skew salting
     max_rounds: int = 50           # L5 page-cap analog
     empty_rounds_stop: int = 3     # A10 (reference k=3)
-    bloom_fpp: float = 0.01
     bloom_min_keys: int = 10_000   # (retained knob; bloom is now always on)
-    bloom_expected_keys: int = 2_000_000  # sizing for the incremental filter
     token_capacity_s: float = 120.0  # bucket capacity = rate · this
     adaptive_rate: bool = False    # T3: shrink/recover per-host budgets
     # T5: failed URLs re-enter the frontier after this many virtual seconds
@@ -176,7 +194,10 @@ class CrawlConfig:
     # on url_hash and the batch is shuffled to the same partitioning, so the
     # join moves only the batch — the right shape when a round fetches a
     # large fraction of the corpus (batch-refresh crawls), where a driver
-    # broadcast of the whole batch is itself a serial bottleneck.
+    # broadcast of the whole batch is itself a serial bottleneck. In both
+    # modes each round first measures its batch (phase small_probe, see
+    # Crawler._probe_batch); only broadcast mode prunes and resizes the
+    # index from that measurement.
     broadcast_fetch: bool = True
     # Broadcast the per-domain dim tables (host_state latest view, robots
     # rules) into the eligibility/robots joins. Right at sandbox scale and
@@ -204,34 +225,6 @@ class CrawlConfig:
     # rollback targets always survive; 32 is conservative for the default
     # compact_every_rounds=8.
     expire_snapshots_keep: int = 0
-    # Broadcast the transitions-latest view into the per-round eligibility
-    # join while the delta stays under this many rows (tracked driver-side:
-    # exactly n_batch rows append per round, reset by compact()). The delta
-    # is orders of magnitude smaller than the frontier between compactions,
-    # so the explicit hint spares the frontier side its shuffle WRITE —
-    # AQE's late SMJ->BHJ conversion only skips the exchange read. Past the
-    # bound (or 0) the join falls back to AQE's runtime choice, which is
-    # the right behavior when a 10^10-row crawl lets the delta grow huge.
-    broadcast_transitions_max_rows: int = 2_000_000
-    # Two-phase small rounds (broadcast_fetch mode): when the driver-side
-    # active-row bound (seeds − rows gone terminal + rows discovered; a
-    # TRUE upper bound on anything still schedulable, see run_round tail)
-    # is at or under this, the round first collects the scheduled batch's
-    # bucket histogram — one tiny JVM job that materializes the cached
-    # batch. Empty rounds then exit before the fetch/probe DAG is even
-    # built, and tiny rounds prune the cached fetch index to the batch's
-    # buckets (the index is range-clustered by __pbucket, so in-memory
-    # batch min/max stats skip everything else without decompressing html)
-    # and coalesce it to at most min(cores, batch rows) partitions, so the
-    # parse stage starts that many Python-worker tasks instead of 8× cores.
-    # A real fetch costs O(batch); with this the simulated one does too.
-    # Correctness never depends on the bound: pruning always uses the
-    # batch's OWN buckets. 0 disables (single combined action, no
-    # pre-probe; the fetch keeps the index's 8× cores partitions).
-    # Robots-disallowed rows — 'discovered' forever but never eligible —
-    # are EXCLUDED from the bound (their count rides in the Bloom-fold
-    # job), so a blocked-heavy corpus does not disarm the tail fast path.
-    small_round_threshold: int = 5000
     # Robots TTL (rounds): every N rounds the crawler re-consults its
     # robots_provider and, for domains whose rules TEXT changed, re-verdicts
     # the active frontier rows of ONLY those domains (a transitions append
@@ -409,23 +402,26 @@ class _Round:
     virtual clock, the round-local cached frames, the pre-round pinned-RDD
     baseline, the commit pool and the phase timer.
 
-    Leaving the ``with`` block — by return or by exception — first waits
-    for every commit still running in the pool, then frees the round's
-    blocks: no background append outlives run_round or reads a block that
-    is already gone."""
+    The round's clock starts before the crawl-lifetime dims are pinned
+    (phase ``pin``, only on rounds that pin), and the baseline is taken
+    after them. Leaving the ``with`` block — by return or by exception —
+    first waits for every commit still running in the pool, then frees the
+    round's blocks: no background append outlives run_round or reads a
+    block that is already gone."""
 
     def __init__(self, crawler: Crawler, k: int):
         self.spark, self.truncate = crawler.spark, crawler.cfg.truncate_lineage
         self.k, self.now = k, crawler.now(k)
         self.cached: list[DataFrame] = []
+        self.marks: list[tuple[str, float]] = []
+        self.t0 = time.monotonic()
+        crawler._pin_dims(self)
         # pre-round pinned RDDs: the release diff frees exactly what this
         # round checkpoints, nothing else
         self.base_rdd_ids = (
             {int(i) for i in self._pinned().keySet().toArray()} if self.truncate else None
         )
         self.pool = ThreadPoolExecutor(max_workers=6)
-        self.marks: list[tuple[str, float]] = []
-        self.t0 = time.monotonic()
 
     def _pinned(self):
         """Every RDD pinned in the block manager (includes localCheckpoint
@@ -541,7 +537,7 @@ class Crawler:
                 self._pages_parts, "url_hash"
             )
         else:
-            # Range-cluster the cached index by hash bucket so a small-round
+            # Range-cluster the cached index by hash bucket so every round's
             # fetch can prune it: each cached partition covers a contiguous
             # bucket span, and in-memory batch stats (min/max per column
             # batch) let `__pbucket IN (batch's buckets)` skip every other
@@ -561,39 +557,38 @@ class Crawler:
         # in _effective_frontier without a count() job.
         self._trans_rows = 0
         # Driver-tracked upper bound on rows that can still be scheduled
-        # (the _active_state_pred set): seeds in, terminal transitions out
-        # (only the ones terminal under the CURRENT T5/T10 config — TTL'd
-        # failures / stale fetches stay counted), discoveries in. Gates the
-        # small-round two-phase path; set by init_frontier (seed count) and
-        # resume_round (_count_active_rows). None = unknown -> disabled.
+        # (the _active_state_pred set, robots-allowed rows only): seeds in,
+        # terminal transitions out (only the ones terminal under the CURRENT
+        # T5/T10 config — TTL'd failures / stale fetches stay counted),
+        # discoveries in. It gates only run()'s bound-0 drained skip, which
+        # spares a fresh crawl its trailing empty round. Set from the seed
+        # count by init_frontier; None (unknown) after resume_round, whose
+        # session then ends through the drained probe in _finish_no_batch.
         self._next_round_bound: int | None = None
         # The robots dim is read by init_frontier, by every round's
         # discovery (_with_robots_allowed) and host_state fold
         # (_new_host_rows): pinned once per Crawler like the fetch index, so
         # those jobs read cached blocks instead of re-evaluating its source
-        # (a Python-row frame costs Python-worker tasks in every job). The
-        # pre-round block in run_round materializes it; a robots-TTL refresh
-        # swaps in a new dim, which the next round pins in turn.
+        # (a Python-row frame costs Python-worker tasks in every job).
+        # _pin_dims materializes it; a robots-TTL refresh swaps in a new
+        # dim, which the next round pins in turn.
         self.robots = robots.persist() if robots is not None else None
         self._robots_pinned: DataFrame | None = None
-        # Last round scheduled nothing -> next round probes batch emptiness
-        # cheaply before running the full stats DAG (empty-round fast path)
-        self._prev_round_empty = False
         # Incrementally-maintained URL-seen Bloom: built by init_frontier or
         # resume_round, then add_df per round
         self._bloom = None
         # the fetch-index cache has been physically materialized (so its RDD
         # id is registered and can never be mistaken for a round-local block
-        # by the release diff — see run_round's pre-snapshot force)
+        # by the release diff — see _pin_dims)
         self._pages_idx_forced = False
 
-    def _empty_bloom(self):
-        cfg = self.cfg
-        return PartitionedBloom.empty(
-            n_buckets=cfg.n_buckets,
-            expected_per_bucket=max(1000, cfg.bloom_expected_keys // cfg.n_buckets),
-            fpp=cfg.bloom_fpp,
-        )
+    def _bloom_sizing(self) -> dict:
+        """PartitionedBloom sizing for this crawl's hash buckets."""
+        return {
+            "n_buckets": self.cfg.n_buckets,
+            "expected_per_bucket": max(1000, BLOOM_EXPECTED_KEYS // self.cfg.n_buckets),
+            "fpp": BLOOM_FPP,
+        }
 
     # ------------------------------------------------------------------ time
     def now(self, round_no: int) -> dt.datetime:
@@ -604,7 +599,6 @@ class Crawler:
         """Seeds -> canonical frontier rows; bootstrap all engine tables."""
         cfg, now0 = self.cfg, self.now(0)
         self.spark.sparkContext.setJobDescription("init_frontier")
-        self._prev_round_empty = False
         canon = canonicalize_url_expr(F.col("url"))
         fr = (
             seeds.select(
@@ -697,7 +691,7 @@ class Crawler:
                 # read-back of the fresh parquet was a redundant scan.
                 if self._bloom is not None:
                     self._bloom.close()  # release superseded broadcast handles
-                self._bloom = self._empty_bloom()
+                self._bloom = PartitionedBloom.empty(**self._bloom_sizing())
                 n_known, n_blocked = self._bloom.add_df(
                     fr.select("url_hash", "robots_allowed"),
                     false_count_of="robots_allowed",
@@ -706,11 +700,11 @@ class Crawler:
         finally:
             fr.unpersist(blocking=False)
         # every allowed seed starts 'discovered': the active-row bound that
-        # gates the small-round fast path starts at the (deduped) seed count
-        # MINUS robots-blocked rows — those stay 'discovered' forever but can
-        # never become eligible, and counting them would disarm the tail
-        # fast path permanently on a blocked-heavy corpus. The blocked count
-        # rides in the same Bloom-fold job (no extra action).
+        # gates the drained skip starts at the (deduped) seed count MINUS
+        # robots-blocked rows — those stay 'discovered' forever but can
+        # never become eligible, and counting them would keep the bound
+        # above 0 for good on any corpus with a blocked URL. The blocked
+        # count rides in the same Bloom-fold job (no extra action).
         self._next_round_bound = n_known - n_blocked
         self._trans_rows = 0
         snaps["transitions"] = self.t["transitions"].append_local(
@@ -730,16 +724,13 @@ class Crawler:
         round; a URL transitions at most once per round, so this is total).
 
         While the delta is small (driver-tracked row count vs
-        broadcast_transitions_max_rows) the latest view is broadcast: the
+        BROADCAST_TRANSITIONS_MAX_ROWS) the latest view is broadcast: the
         frontier side then never shuffles — without the hint the planner
         SMJs and even AQE's late BHJ conversion has already paid the
         frontier's shuffle WRITE (O(frontier) rows × full width, every
         round). Past the bound AQE decides from real sizes."""
         w = Window.partitionBy("url_hash").orderBy(F.col("round").desc())
-        hint = (
-            self.cfg.broadcast_transitions_max_rows > 0
-            and self._trans_rows <= self.cfg.broadcast_transitions_max_rows
-        )
+        hint = self._trans_rows <= BROADCAST_TRANSITIONS_MAX_ROWS
         # Two DISJOINT latest-wins views: state transitions own state/nft/
         # attempt (robots_allowed NULL on every regular row), robots-TTL
         # refresh rows own robots_allowed (state fields NULL). A refresh and
@@ -786,6 +777,10 @@ class Crawler:
                 .drop("__t_rob")
             )
         return out
+
+    def _robots_ttl_live(self) -> bool:
+        """A robots refresh can still flip verdicts in this crawl."""
+        return self.cfg.robots_ttl_rounds > 0 and self._robots_provider is not None
 
     def _active_state_pred(self):
         """States that can still become eligible (terminal states depend on
@@ -934,11 +929,7 @@ class Crawler:
                 .persist()
             )
             try:
-                stats = flips.agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.col("__new_v").cast("int")).alias("n_allowed"),
-                ).collect()[0]
-                n_flips = int(stats["n"] or 0)
+                n_flips = flips.count()
                 if n_flips == 0:
                     return
                 # verdict-only rows: state/nft/attempt stay NULL so the
@@ -956,12 +947,9 @@ class Crawler:
                     ),
                     {"round": k, "op": "robots_refresh"},
                 )
+                # (no active-row bound upkeep: run() never reads the bound
+                # while a robots provider can flip verdicts)
                 self._trans_rows += n_flips
-                # the active-row bound must never under-predict: newly
-                # ALLOWED rows join the schedulable set (add them); newly
-                # blocked rows only make it more of an over-estimate
-                if self._next_round_bound is not None:
-                    self._next_round_bound += int(stats["n_allowed"] or 0)
             finally:
                 flips.unpersist()
         finally:
@@ -1036,7 +1024,6 @@ class Crawler:
         ones init_frontier bootstrapped — (exactly-once semantics, SURVEY.md
         T6), then rebuilds the driver-side state from the tables."""
         self.spark.sparkContext.setJobDescription("resume")
-        self._prev_round_empty = False
         last = (
             self.t["rounds"].read(self.spark)
             .filter(F.col("completed"))
@@ -1060,42 +1047,30 @@ class Crawler:
             if self.t[name].current_snapshot_id() != sid:
                 self.t[name].rollback(sid)
         self._trans_rows = self.t["transitions"].read(self.spark).count()
-        self._next_round_bound = self._count_active_rows()
+        # the active-row bound is unknown here: the resumed session ends
+        # through the drained probe, not the bound-0 skip (no count job)
+        self._next_round_bound = None
         # one distributed rebuild on resume; incremental add_df thereafter
         if self._bloom is not None:
             self._bloom.close()
         known = self.t["frontier"].read(self.spark).select("url_hash").unionByName(
             self.t["seen"].read(self.spark).select("url_hash")
         )
-        self._bloom = PartitionedBloom.build(
-            known, "url_hash", n_buckets=self.cfg.n_buckets,
-            expected_per_bucket=max(1000, self.cfg.bloom_expected_keys // self.cfg.n_buckets),
-            fpp=self.cfg.bloom_fpp,
-        )
+        self._bloom = PartitionedBloom.build(known, "url_hash", **self._bloom_sizing())
         return nxt
-
-    def _count_active_rows(self) -> int:
-        """Exact count of rows the scheduler can still see (active
-        partitions, latest transition applied, active-state predicate) —
-        re-arms the small-round fast path after a resume, where the
-        incrementally-maintained bound is otherwise unknown. Production
-        crawls run mostly in resumed sessions, so one extra count job here
-        (resume already pays a transitions count and a Bloom rebuild) keeps the
-        O(batch) tail-round behavior across restarts."""
-        return int(
-            self._effective_frontier(
-                self._read_active_frontier(), self.t["transitions"].read(self.spark)
-            )
-            .filter(self._active_state_pred() & F.col("robots_allowed"))
-            .count()
-        )
 
     def _finish_no_batch(self, rc: _Round, current: DataFrame) -> dict:
         """Nothing scheduled this round: stop, or record an empty round."""
         # A10 drained fast path: when NO row can ever become eligible again
         # the caller stops immediately and nothing is committed — nothing
         # changed, nothing will; resume replays the same empty round.
-        if current.filter(self._active_state_pred()).limit(1).count() == 0:
+        # Robots-blocked rows stay 'discovered' forever, so they count as
+        # drained unless a robots refresh can still flip their verdict (the
+        # rule the active-row bound follows too).
+        live = self._active_state_pred()
+        if not self._robots_ttl_live():
+            live = live & F.col("robots_allowed")
+        if current.filter(live).limit(1).count() == 0:
             wall_ms, phases = rc.trace()
             return _round_result(rc.k, wall_ms, drained=True, phases=phases)
         # Record the empty round for resume/termination bookkeeping. No
@@ -1104,7 +1079,6 @@ class Crawler:
         # changes nothing else (adapt/breaker are no-ops on zero outcomes,
         # failure_count < threshold between rounds by the trip-reset
         # invariant).
-        self._prev_round_empty = True
         rc.phase("commit")
         snaps = {n: self.t[n].current_snapshot_id() for n in _ROUND_SNAPS if n != "metrics"}
         wall_ms, phases = self._record_round(rc, snaps, [("fetch", -1, 0, 0, 0)], (0, 0, 0, 0))
@@ -1132,31 +1106,40 @@ class Crawler:
 
     # ----------------------------------------------------------------- round
     def run_round(self, k: int) -> dict:
-        # Crawl-lifetime caches are materialized BEFORE _Round takes its
-        # pinned-RDD baseline (ADVICE r5, medium): persist() registers an RDD
-        # id only at first PHYSICAL execution, so a cache first filled
-        # inside a round would look round-local to the release diff and be
-        # silently unpersisted, re-evaluating its source in every later job.
-        if self.cfg.truncate_lineage and not self._pages_idx_forced:
-            # the fetch index; a cache-only scan when a caller already
-            # forced it (bench.py does, with a count)
+        with _Round(self, k) as rc:
+            return self._run_round_impl(rc)
+
+    def _pin_dims(self, rc: _Round) -> None:
+        """Materialize the crawl-lifetime caches under phase ``pin``, before
+        ``rc`` takes its pinned-RDD baseline (ADVICE r5, medium): persist()
+        registers an RDD id only at first PHYSICAL execution, so a cache
+        first filled inside a round would look round-local to the release
+        diff and be silently unpersisted, re-evaluating its source in every
+        later job."""
+        # the fetch index; a cache-only scan when a caller already forced it
+        # (bench.py does, with a count)
+        force_idx = self.cfg.truncate_lineage and not self._pages_idx_forced
+        # the robots dim: once per Crawler, and once more after each
+        # robots-TTL refresh that replaced it
+        pin_robots = self.robots is not None and self.robots is not self._robots_pinned
+        if not (force_idx or pin_robots):
+            return
+        rc.phase("pin")
+        if force_idx:
             self.pages_idx.count()
             self._pages_idx_forced = True
-        if self.robots is not None and self.robots is not self._robots_pinned:
-            # the robots dim: once per Crawler, and once more after each
-            # robots-TTL refresh that replaced it (the superseded dim is
-            # released first — an equal plan shares its cache entry)
+        if pin_robots:
+            # the superseded dim is released first — an equal plan shares
+            # its cache entry
             if self._robots_pinned is not None:
                 self._robots_pinned.unpersist()
             self.robots = self._robots_pinned = self.robots.persist()
             self.robots.count()
-        with _Round(self, k) as rc:
-            return self._run_round_impl(rc)
 
     def _run_round_impl(self, rc: _Round) -> dict:
         # one method per phase; each rc.phase call labels the jobs that
         # follow r<k>:<phase> and starts that phase's timer
-        cfg, k, ttl = self.cfg, rc.k, self.cfg.robots_ttl_rounds
+        k, ttl = rc.k, self.cfg.robots_ttl_rounds
         if ttl > 0 and k > 0 and k % ttl == 0 and self._robots_provider is not None:
             # Robots TTL (round-4 verdict item #5): refresh rules BEFORE
             # eligibility so this round already schedules under the new
@@ -1165,25 +1148,9 @@ class Crawler:
             self._refresh_robots(k)
         rc.phase("eligibility")
         host_state, current, batch = self._schedule(rc)
-        pages_src = self.pages_idx
-        bound = self._next_round_bound
-        if cfg.small_round_threshold > 0 and cfg.broadcast_fetch and (
-            bound is not None and bound <= cfg.small_round_threshold
-        ):
-            rc.phase("small_probe")
-            pages_src = self._small_probe(batch, pages_src)
-            if pages_src is None:
-                return self._finish_no_batch(rc, current)
-        # Empty-round fast path (round-3 ADVICE): while waiting out backoffs
-        # the batch is empty round after round, but the stats actions below
-        # still run the full fetch-join/explode/probe DAG (with
-        # broadcast_fetch=False that shuffles against the persisted corpus
-        # each time). After any empty round, probe cheaply FIRST — one
-        # limit(1) job over the already-persisted batch — and skip straight
-        # to the drained/empty-commit path. Non-empty rounds (the common
-        # case) never pay the extra job. (The small-round probe above
-        # already answered emptiness when it ran.)
-        elif self._prev_round_empty and batch.limit(1).count() == 0:
+        rc.phase("small_probe")
+        pages_src = self._probe_batch(batch)
+        if pages_src is None:
             return self._finish_no_batch(rc, current)
 
         rc.phase("fetch_parse_dedup_probe")
@@ -1206,8 +1173,6 @@ class Crawler:
         suspect_buckets = self._suspect_buckets(flagged)
         rc.phase("stats")
         n = self._fetch_counts(batch, fetched)
-        if n.batch == 0:
-            return self._finish_no_batch(rc, current)
         # Pin both known-side snapshots BEFORE the background seen append is
         # submitted: the round's discovery reads a fixed file list and is
         # immune to the in-flight commit landing mid-round (ADVICE r1 — the
@@ -1300,35 +1265,36 @@ class Crawler:
         )
         return host_state, current, rc.materialize(batch)  # batch is reused 4×
 
-    def _small_probe(self, batch: DataFrame, pages_src: DataFrame) -> DataFrame | None:
-        """Collect a small round's bucket histogram before any fetch plan
-        exists -> the fetch index pruned to the batch's buckets and sized to
-        the batch, or None when the batch is empty."""
-        # Two-phase small rounds (round-4 floor cut): when the driver-side
-        # active-row bound says everything still schedulable fits in a tiny
-        # batch, one small job over the cached batch — it materializes the
-        # checkpoint every later phase reads — returns its rows per hash
-        # bucket BEFORE the fetch/probe DAG exists. Empty rounds exit
-        # immediately; tiny rounds (a) prune the range-clustered cached
-        # corpus to the batch's own buckets — in-memory batch min/max stats
-        # then skip every other cached partition, so a 1-URL tail round
-        # costs O(batch) instead of O(corpus) (a real network fetch is
-        # O(batch); the simulation was the one place LESS scalable than
-        # reality) — and (b) coalesce the pruned index to at most
-        # min(cores, batch rows) partitions. The fetch-join partitioning is
-        # the parse stage's, and every parse task pays a Python worker's
-        # fixed start-up; the 8× wave packing of the cached index only pays
-        # off on big rounds. The batch itself stays the cached JVM frame;
-        # under truncate_lineage every downstream plan sees it as a flat
+    def _probe_batch(self, batch: DataFrame) -> DataFrame | None:
+        """Measure the round's batch before any fetch plan exists -> the
+        fetch index to join it against, or None when the batch is empty."""
+        # One small JVM job over the cached batch — it materializes the
+        # checkpoint every later phase reads — collects its rows per hash
+        # bucket: emptiness, the buckets and the row count in one
+        # measurement. Empty rounds exit before the fetch/probe DAG is even
+        # built. The batch itself stays the cached JVM frame; under
+        # truncate_lineage every downstream plan sees it as a flat
         # checkpointed leaf.
         per_bucket = batch.groupBy("bucket").count().collect()
         if not per_bucket:
             return None
-        n_rows = sum(int(r["count"]) for r in per_bucket)
-        parts = min(self.spark.sparkContext.defaultParallelism, n_rows)
-        return pages_src.filter(
+        if not self.cfg.broadcast_fetch:
+            return self.pages_idx  # the shuffle join needs the whole partitioning
+        # Broadcast mode prunes the range-clustered cached index to the
+        # batch's own buckets: in-memory batch min/max stats then skip every
+        # other cached partition, so a 1-URL tail round costs O(batch)
+        # instead of O(corpus), as a real network fetch does. A small batch
+        # also coalesces the pruned index to min(cores, batch rows)
+        # partitions: the fetch-join partitioning is the parse stage's, every
+        # parse task pays a Python worker's fixed start-up, and the index's
+        # 8× cores wave packing only pays off on big rounds.
+        pruned = self.pages_idx.filter(
             F.col("__pbucket").isin(sorted(int(r["bucket"]) for r in per_bucket))
-        ).coalesce(parts)
+        )
+        n_rows = sum(int(r["count"]) for r in per_bucket)
+        if n_rows > SMALL_ROUND_ROWS:
+            return pruned
+        return pruned.coalesce(min(self.spark.sparkContext.defaultParallelism, n_rows))
 
     def _fetch_extract(self, rc: _Round, batch: DataFrame, pages_src: DataFrame) -> DataFrame:
         """Fetch (simulated from the pages corpus) + extract, cached."""
@@ -1734,7 +1700,6 @@ class Crawler:
             self._next_round_bound = (
                 max(0, self._next_round_bound - gone) + n_new - n_new_blocked
             )
-        self._prev_round_empty = False
         return _round_result(
             rc.k, wall_ms, eligible=n.batch, fetched=n.ok, transient=n.transient,
             missing=n.missing, links=n.raw_links, new=n_new, phases=phases,
@@ -1773,7 +1738,7 @@ class Crawler:
         # bound) can re-enter at a future refresh, so bound 0 no longer
         # proves drained-forever — the skip stays off and trailing rounds
         # run out the normal empty/drained probes instead.
-        ttl_live = self.cfg.robots_ttl_rounds > 0 and self._robots_provider is not None
+        ttl_live = self._robots_ttl_live()
         for k in range(start, cap):
             if self._next_round_bound == 0 and not ttl_live:
                 # The driver-tracked active-row bound never under-predicts

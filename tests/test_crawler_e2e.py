@@ -80,8 +80,9 @@ def test_resume_equals_uninterrupted(spark, corpus, baseline, tmp_path):
     resumed = Crawler(spark, _cfg(tmp_path / "part"), pages, robots)
     assert resumed._trans_rows == 0 and resumed._bloom is None  # constructor defaults
     # resume_round rebuilds the driver-tracked state from the tables: the
-    # real transitions-delta size, the Bloom over every known key, and an
-    # exact active-row count (never above the interrupted run's bound)
+    # real transitions-delta size and the Bloom over every known key; the
+    # active-row bound is left unknown (no count job), so the resumed run
+    # ends through the drained probe
     assert resumed.resume_round() == 2
     assert resumed._trans_rows == resumed.t["transitions"].read(spark).count() > 0
     known = resumed.t["frontier"].read(spark).select("url_hash").unionByName(
@@ -89,7 +90,7 @@ def test_resume_equals_uninterrupted(spark, corpus, baseline, tmp_path):
     )
     keys = np.array([r["url_hash"] for r in known.collect()])
     assert resumed._bloom.might_contain_np(keys).all()
-    assert 0 <= resumed._next_round_bound <= part._next_round_bound
+    assert resumed._next_round_bound is None
     resumed.run(seeds=None)
     assert _crawl_outcome(spark, resumed) == want
 
@@ -147,6 +148,31 @@ def test_resume_without_bootstrap_ids_raises(spark, corpus, tmp_path):
     c.t["rounds"].append_local([], ROUNDS_SCHEMA, {"op": "init"}, overwrite=True)
     with pytest.raises(ValueError, match="no bootstrap snapshot ids"):
         Crawler(spark, _cfg(tmp_path / "noboot"), pages, robots).resume_round()
+
+
+def test_resumed_finished_crawl_stops_on_first_round(spark, corpus, tmp_path):
+    """A resumed session has no active-row bound, so it ends through the
+    drained probe. Robots-blocked rows stay 'discovered' forever but can
+    never become eligible: on a finished crawl that still holds some, the
+    resumed run's first round must report drained and commit nothing, not
+    run out empty_rounds_stop empty rounds."""
+    pages, seeds, robots = corpus
+    robots = robots.withColumn(
+        "robots_rules",
+        F.when(F.pmod(F.hash("registrable_domain"), F.lit(2)) == 0,
+               F.lit("User-agent: *\nDisallow: /\n"))
+        .otherwise(F.col("robots_rules")),
+    )
+    root = tmp_path / "blk"
+    Crawler(spark, _cfg(root), pages, robots).run(seeds=seeds)
+    c = Crawler(spark, _cfg(root), pages, robots)
+    frontier = c.t["frontier"].read(spark)
+    assert frontier.filter((F.col("state") == "discovered") & ~F.col("robots_allowed")).count()
+    assert frontier.filter(F.col("state") == "fetched").count()
+    n_rounds = c.t["rounds"].read(spark).count()
+    stats = c.run(seeds=None)
+    assert [s.get("drained") for s in stats] == [True]
+    assert c.t["rounds"].read(spark).count() == n_rounds
 
 
 def test_failed_commit_waits_for_inflight_appends(spark, corpus, baseline, tmp_path):
@@ -414,29 +440,23 @@ def test_copartitioned_fetch_join_equivalent(spark, corpus, baseline, tmp_path):
     pages, seeds, robots = corpus
     cfg = dataclasses.replace(_cfg(tmp_path / "cp"), broadcast_fetch=False)
     c = Crawler(spark, cfg, pages, robots)
-    c.run(seeds=seeds)
+    stats = c.run(seeds=seeds)
     assert _crawl_outcome(spark, c) == baseline
+    # every round measures its batch first, in this fetch mode too
+    assert all("small_probe" in s["phases"] for s in stats if not s.get("drained"))
 
 
 def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
-    """Round-4 two-phase small rounds: the baseline config keeps the fast
-    path armed on every round here (8 seeds << threshold 5000), so (a)
-    disabling it entirely (threshold=0) must give the identical crawl, and
-    (b) on an armed run the driver-side active-row bound must never
-    under-predict a round's scheduled batch, and the bucket pre-probe must
-    actually fire (the round's phases include small_probe). (c) An armed
-    round keeps Python workers to what its UDFs need: the parse stage runs
-    at most min(cores, batch rows) partitions (the metrics table's fetch
-    rows carry one partition_id per fetch partition), and the batch the
-    fetch joins is a JVM frame, not one rebuilt from Python rows."""
-    import dataclasses
-
+    """Two-phase rounds: every round first collects its batch's bucket
+    histogram (phase small_probe) and sizes the fetch from it, and the crawl
+    equals the clean run. (a) The driver-side active-row bound, which gates
+    the drained skip, must never under-predict a round's scheduled batch.
+    (b) A small round (every round here: 8 seeds) keeps Python workers to
+    what its UDFs need: the parse stage runs at most min(cores, batch rows)
+    partitions (the metrics table's fetch rows carry one partition_id per
+    fetch partition), and the batch the fetch joins is a JVM frame, not one
+    rebuilt from Python rows."""
     pages, seeds, robots = corpus
-    cfg_off = dataclasses.replace(_cfg(tmp_path / "sroff"), small_round_threshold=0)
-    off = Crawler(spark, cfg_off, pages, robots)
-    off.run(seeds=seeds)
-    assert _crawl_outcome(spark, off) == baseline
-
     on = Crawler(spark, _cfg(tmp_path / "sron"), pages, robots)
     orig_rr, checks = on.run_round, []
     orig_fetch, batch_lineage = on._fetch_extract, []
@@ -455,9 +475,9 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
     on._fetch_extract = fetch
     on.run(seeds=seeds)
     assert _crawl_outcome(spark, on) == baseline
-    assert all(b is None or elig <= b for _, b, elig, _ in checks)
-    armed = [(k, elig) for k, _, elig, phases in checks if "small_probe" in phases]
-    assert armed
+    assert checks and all(
+        elig <= b and "small_probe" in phases for _, b, elig, phases in checks
+    )
     fetch_rows = (
         on.t["metrics"].read(spark)
         .filter((F.col("stage") == "fetch") & (F.col("partition_id") >= 0))
@@ -466,7 +486,7 @@ def test_small_round_fast_path_equivalent(spark, corpus, baseline, tmp_path):
     )
     parts = {r["round"]: r["n"] for r in fetch_rows}
     cores = spark.sparkContext.defaultParallelism
-    assert all(parts.get(k, 0) <= min(cores, elig) for k, elig in armed)
+    assert all(parts.get(k, 0) <= min(cores, elig) for k, _, elig, _ in checks)
     assert batch_lineage and not any("PythonRDD" in s for s in batch_lineage)
 
 
@@ -579,8 +599,10 @@ def test_lineage_recorded(spark, corpus, tmp_path):
     for r, s in zip(rounds, stats):
         rows = {t["stage"]: t["wall_ms"] for t in trace if t["round"] == r["round"]}
         assert rows == s["phases"]
-        assert set(rows) <= set(PHASES) | {"robots_refresh"}
+        assert set(rows) <= set(PHASES) | {"robots_refresh", "pin"}
         assert abs(sum(rows.values()) - r["wall_ms"]) <= len(rows)
+    # a fresh Crawler pins its fetch index and robots dim inside round 0
+    assert "pin" in stats[0]["phases"]
     # snapshot ids recorded per round are readable (time travel)
     for r in rounds:
         assert c.t["results"].read(spark, r["results_snap"]) is not None

@@ -75,11 +75,11 @@ def test_frontier_pipeline_plan_shape(spark):
 def test_transitions_latest_broadcasts_under_bound(spark, tmp_path):
     """Round-4: the per-round eligibility join broadcasts the transitions
     latest-wins view by EXPLICIT hint while the driver-tracked delta row
-    count is under broadcast_transitions_max_rows — asserted with the
+    count is under BROADCAST_TRANSITIONS_MAX_ROWS — asserted with the
     size-based auto-broadcast disabled, so only the hint can produce the
     BHJ (the frontier side then pays no shuffle write) — and falls back to
     the planner's own choice once the delta outgrows the bound."""
-    from gh_crawler_spark.crawler import Crawler, CrawlConfig
+    from gh_crawler_spark.crawler import BROADCAST_TRANSITIONS_MAX_ROWS, Crawler, CrawlConfig
     from gh_crawler_spark.sources.pages import generate_pages, generate_seeds
 
     pages = generate_pages(spark, 40, seed=3, n_domains=5)
@@ -95,7 +95,7 @@ def test_transitions_latest_broadcasts_under_bound(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         hinted = c._effective_frontier(frontier, trans)
         assert uses_broadcast_join(hinted)
-        c._trans_rows = cfg.broadcast_transitions_max_rows + 1
+        c._trans_rows = BROADCAST_TRANSITIONS_MAX_ROWS + 1
         unhinted = c._effective_frontier(frontier, trans)
         assert not uses_broadcast_join(unhinted)
     finally:

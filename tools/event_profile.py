@@ -4,8 +4,10 @@ Parses one Spark event log (spark.eventLog.enabled=true) and reports:
 
   1. PER-DESCRIPTION WALL — merged job wall, job count and Python-worker
      tasks for each job description. The crawler labels its jobs
-     ``r<k>:<phase>`` (eligibility / small_probe / fetch_parse_dedup_probe /
-     stats / discover / commit:<table>), ``init_frontier`` and ``compact``;
+     ``r<k>:<phase>`` (pin / eligibility / small_probe /
+     fetch_parse_dedup_probe / stats / discover / commit:<table>; ``pin``
+     only on rounds that materialize the crawl-lifetime caches),
+     ``init_frontier`` and ``compact``;
      the Python-worker tasks are also totalled per round ``r<k>``. A stage's
      tasks count as Python-worker tasks when its RDD lineage (``RDD Info``)
      holds a ``PythonRDD`` or an ``ArrowEvalPython`` /
