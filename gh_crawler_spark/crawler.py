@@ -402,12 +402,13 @@ class _Round:
     virtual clock, the round-local cached frames, the pre-round pinned-RDD
     baseline, the commit pool and the phase timer.
 
-    The round's clock starts before the crawl-lifetime dims are pinned
-    (phase ``pin``, only on rounds that pin), and the baseline is taken
-    after them. Leaving the ``with`` block — by return or by exception —
-    first waits for every commit still running in the pool, then frees the
-    round's blocks: no background append outlives run_round or reads a
-    block that is already gone."""
+    The round's clock starts before the robots dim is pinned (phase
+    ``pin``, only on rounds that pin it), and the baseline is taken after
+    it; the fetch index is pinned later, once the round has a batch to
+    fetch, and joins the baseline then. Leaving the ``with`` block — by
+    return or by exception — first waits for every commit still running in
+    the pool, then frees the round's blocks: no background append outlives
+    run_round or reads a block that is already gone."""
 
     def __init__(self, crawler: Crawler, k: int):
         self.spark, self.truncate = crawler.spark, crawler.cfg.truncate_lineage
@@ -415,18 +416,19 @@ class _Round:
         self.cached: list[DataFrame] = []
         self.marks: list[tuple[str, float]] = []
         self.t0 = time.monotonic()
-        crawler._pin_dims(self)
+        crawler._pin_robots(self)
         # pre-round pinned RDDs: the release diff frees exactly what this
         # round checkpoints, nothing else
-        self.base_rdd_ids = (
-            {int(i) for i in self._pinned().keySet().toArray()} if self.truncate else None
-        )
+        self.base_rdd_ids = self.pinned_ids() if self.truncate else None
         self.pool = ThreadPoolExecutor(max_workers=6)
 
     def _pinned(self):
         """Every RDD pinned in the block manager (includes localCheckpoint
         blocks, which DataFrame.unpersist cannot reach)."""
         return self.spark.sparkContext._jsc.getPersistentRDDs()
+
+    def pinned_ids(self) -> set[int]:
+        return {int(i) for i in self._pinned().keySet().toArray()}
 
     def __enter__(self) -> _Round:
         return self
@@ -455,10 +457,14 @@ class _Round:
 
     def trace(self) -> tuple[int, dict[str, int]]:
         """Wall ms since the round started and each phase's wall ms; the
-        first phase starts with the round, so the phases sum to the wall."""
+        first phase starts with the round, so the phases sum to the wall. A
+        phase entered twice (``pin``) books the sum of its spans."""
         cuts = [self.t0] + [t for _, t in self.marks[1:]] + [time.monotonic()]
         ms = [int((t - self.t0) * 1000) for t in cuts]
-        return ms[-1], {name: b - a for (name, _), a, b in zip(self.marks, ms, ms[1:])}
+        phases: dict[str, int] = {}
+        for (name, _), a, b in zip(self.marks, ms, ms[1:]):
+            phases[name] = phases.get(name, 0) + b - a
+        return ms[-1], phases
 
     def materialize(self, df: DataFrame) -> DataFrame:
         """Cache a round-local frame; freed when the round exits.
@@ -570,7 +576,7 @@ class Crawler:
         # (_new_host_rows): pinned once per Crawler like the fetch index, so
         # those jobs read cached blocks instead of re-evaluating its source
         # (a Python-row frame costs Python-worker tasks in every job).
-        # _pin_dims materializes it; a robots-TTL refresh swaps in a new
+        # _pin_robots materializes it; a robots-TTL refresh swaps in a new
         # dim, which the next round pins in turn.
         self.robots = robots.persist() if robots is not None else None
         self._robots_pinned: DataFrame | None = None
@@ -579,7 +585,7 @@ class Crawler:
         self._bloom = None
         # the fetch-index cache has been physically materialized (so its RDD
         # id is registered and can never be mistaken for a round-local block
-        # by the release diff — see _pin_dims)
+        # by the release diff — see _pin_fetch_index)
         self._pages_idx_forced = False
 
     def _bloom_sizing(self) -> dict:
@@ -1109,32 +1115,36 @@ class Crawler:
         with _Round(self, k) as rc:
             return self._run_round_impl(rc)
 
-    def _pin_dims(self, rc: _Round) -> None:
-        """Materialize the crawl-lifetime caches under phase ``pin``, before
-        ``rc`` takes its pinned-RDD baseline (ADVICE r5, medium): persist()
-        registers an RDD id only at first PHYSICAL execution, so a cache
-        first filled inside a round would look round-local to the release
-        diff and be silently unpersisted, re-evaluating its source in every
-        later job."""
-        # the fetch index; a cache-only scan when a caller already forced it
-        # (bench.py does, with a count)
-        force_idx = self.cfg.truncate_lineage and not self._pages_idx_forced
-        # the robots dim: once per Crawler, and once more after each
-        # robots-TTL refresh that replaced it
-        pin_robots = self.robots is not None and self.robots is not self._robots_pinned
-        if not (force_idx or pin_robots):
+    # Crawl-lifetime caches are materialized under phase ``pin`` and kept
+    # out of the round's release diff (ADVICE r5, medium): persist()
+    # registers an RDD id only at first PHYSICAL execution, so a cache first
+    # filled inside a round would look round-local to the diff and be
+    # silently unpersisted, re-evaluating its source in every later job.
+    def _pin_robots(self, rc: _Round) -> None:
+        """Pin the robots dim before ``rc`` takes its baseline: once per
+        Crawler, and once more after each robots-TTL refresh replaced it."""
+        if self.robots is None or self.robots is self._robots_pinned:
             return
         rc.phase("pin")
-        if force_idx:
-            self.pages_idx.count()
-            self._pages_idx_forced = True
-        if pin_robots:
-            # the superseded dim is released first — an equal plan shares
-            # its cache entry
-            if self._robots_pinned is not None:
-                self._robots_pinned.unpersist()
-            self.robots = self._robots_pinned = self.robots.persist()
-            self.robots.count()
+        # the superseded dim is released first — an equal plan shares its
+        # cache entry
+        if self._robots_pinned is not None:
+            self._robots_pinned.unpersist()
+        self.robots = self._robots_pinned = self.robots.persist()
+        self.robots.count()
+
+    def _pin_fetch_index(self, rc: _Round) -> None:
+        """Pin the fetch index once a round has a batch to fetch, adding
+        the RDD it registers to ``rc``'s baseline: a round that only
+        reports drained (a resumed, finished crawl) never builds it. A
+        cache-only scan when a caller already forced the index."""
+        if not self.cfg.truncate_lineage or self._pages_idx_forced:
+            return
+        rc.phase("pin")
+        before = rc.pinned_ids()
+        self.pages_idx.count()
+        self._pages_idx_forced = True
+        rc.base_rdd_ids |= rc.pinned_ids() - before
 
     def _run_round_impl(self, rc: _Round) -> dict:
         # one method per phase; each rc.phase call labels the jobs that
@@ -1152,6 +1162,7 @@ class Crawler:
         pages_src = self._probe_batch(batch)
         if pages_src is None:
             return self._finish_no_batch(rc, current)
+        self._pin_fetch_index(rc)
 
         rc.phase("fetch_parse_dedup_probe")
         fetched = self._fetch_extract(rc, batch, pages_src)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -25,7 +26,8 @@ def get_spark(
 
     ``cores=None`` -> ``local[*]``. On a real cluster the same engine code is
     submitted with ``spark-submit --master yarn|k8s --py-files engine.zip``;
-    nothing here is local-mode-specific except the master URL.
+    nothing here is local-mode-specific except the master URL and the
+    Python-worker daemon (``python_daemon_module``).
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -64,6 +66,9 @@ def get_spark(
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     merged = dict(json.loads(env_conf)) if env_conf else {}
     merged.update(extra_conf or {})
+    daemon = python_daemon_module(merged.get("spark.master", master))
+    if daemon:
+        builder = builder.config("spark.python.daemon.module", daemon)
     for k, v in merged.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -80,6 +85,25 @@ def get_spark(
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.rdd.RDD", jvm.org.apache.logging.log4j.Level.ERROR
         )
-    except Exception:
-        pass  # diagnostic nicety only; any log4j API drift is non-fatal
+    except Exception as exc:  # log4j API drift costs only the quieter log
+        warnings.warn(f"could not raise org.apache.spark.rdd.RDD's log level: {exc!r}",
+                      RuntimeWarning, stacklevel=2)
     return spark
+
+
+def python_daemon_module(master: str) -> str | None:
+    """The engine's Python-worker daemon (``_pydaemon``) where Spark's
+    daemon can import it at launch, else None (Spark's stock daemon).
+
+    That takes a ``local`` or ``local[...]`` master, whose daemon runs in
+    the driver's working directory (``python -m`` puts it on ``sys.path``)
+    with the driver's ``PYTHONPATH``, and an engine imported from a
+    directory that is one of those. Executors of other masters
+    (``local-cluster``, yarn, k8s) run elsewhere, and ``--py-files``
+    archives such as ``dist/engine.zip`` reach a worker's ``sys.path`` per
+    task, after its daemon started."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    visible = {os.path.abspath(p) for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p}
+    if master.split("[")[0] == "local" and os.path.isdir(root) and root in visible | {os.getcwd()}:
+        return "gh_crawler_spark._pydaemon"
+    return None

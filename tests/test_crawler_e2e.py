@@ -155,7 +155,8 @@ def test_resumed_finished_crawl_stops_on_first_round(spark, corpus, tmp_path):
     drained probe. Robots-blocked rows stay 'discovered' forever but can
     never become eligible: on a finished crawl that still holds some, the
     resumed run's first round must report drained and commit nothing, not
-    run out empty_rounds_stop empty rounds."""
+    run out empty_rounds_stop empty rounds, and it must not build the
+    fetch index for that round."""
     pages, seeds, robots = corpus
     robots = robots.withColumn(
         "robots_rules",
@@ -164,7 +165,9 @@ def test_resumed_finished_crawl_stops_on_first_round(spark, corpus, tmp_path):
         .otherwise(F.col("robots_rules")),
     )
     root = tmp_path / "blk"
-    Crawler(spark, _cfg(root), pages, robots).run(seeds=seeds)
+    first = Crawler(spark, _cfg(root), pages, robots)
+    first.run(seeds=seeds)
+    first.pages_idx.unpersist()  # an equal plan would share its filled cache
     c = Crawler(spark, _cfg(root), pages, robots)
     frontier = c.t["frontier"].read(spark)
     assert frontier.filter((F.col("state") == "discovered") & ~F.col("robots_allowed")).count()
@@ -173,6 +176,8 @@ def test_resumed_finished_crawl_stops_on_first_round(spark, corpus, tmp_path):
     stats = c.run(seeds=None)
     assert [s.get("drained") for s in stats] == [True]
     assert c.t["rounds"].read(spark).count() == n_rounds
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(c.pages_idx._jdf)
+    assert not cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
 
 
 def test_failed_commit_waits_for_inflight_appends(spark, corpus, baseline, tmp_path):
@@ -601,7 +606,8 @@ def test_lineage_recorded(spark, corpus, tmp_path):
         assert rows == s["phases"]
         assert set(rows) <= set(PHASES) | {"robots_refresh", "pin"}
         assert abs(sum(rows.values()) - r["wall_ms"]) <= len(rows)
-    # a fresh Crawler pins its fetch index and robots dim inside round 0
+    # a fresh Crawler pins its robots dim before round 0's baseline and its
+    # fetch index once round 0 has a batch: one `pin` row books both spans
     assert "pin" in stats[0]["phases"]
     # snapshot ids recorded per round are readable (time travel)
     for r in rounds:

@@ -22,7 +22,11 @@ Parses one Spark event log (spark.eventLog.enabled=true) and reports:
      counted. Each Python-worker task pays a fixed worker set-up cost
      (about 0.25 s of slot time on a 4-vCPU host; CLAUDE.md), so
      on small rounds count these tasks, not UDF time, when sizing a change
-     at the Python boundary.
+     at the Python boundary. Next to them, ``py_boot_s`` sums the tasks'
+     ``time to start Python workers`` metric (SQL Python operators only;
+     RDD-level PythonRDD tasks do not report it): from a task's start
+     until its worker is ready, so the daemon's own start and each fork
+     of a new worker; a reused worker adds nothing.
   2. DRIVER GAPS — wall intervals with no job running (Catalyst analysis,
      file listing, py4j round-trips, manifest IO), totalled and listed by
      the description of the job that starts at the gap's end.
@@ -44,6 +48,7 @@ import json
 import sys
 
 PYTHON_SCOPES = ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas")
+PYTHON_BOOT = "time to start Python workers"  # a SQL timing metric, in ms
 
 
 def python_tasks(stage_info: dict, computed: set[int]) -> int:
@@ -85,7 +90,8 @@ def parse(path: str) -> tuple[list[dict], dict[int, dict]]:
     jobs: dict[int, dict] = {}
     computed: set[int] = set()  # persisted RDDs that a completed stage computed
     stages: dict[int, dict] = collections.defaultdict(
-        lambda: {"task_ms": 0, "max_task": 0, "n_tasks": 0, "py_parts": 0, "desc": "?"}
+        lambda: {"task_ms": 0, "max_task": 0, "n_tasks": 0, "py_parts": 0, "py_boot_ms": 0,
+                 "desc": "?"}
     )
     with open(path, encoding="utf-8") as f:
         for line in f:
@@ -125,6 +131,10 @@ def parse(path: str) -> tuple[list[dict], dict[int, dict]]:
                 st["task_ms"] += dur
                 st["n_tasks"] += 1
                 st["max_task"] = max(st["max_task"], dur)
+                st["py_boot_ms"] += sum(
+                    int(a.get("Update") or 0) for a in ti.get("Accumulables", [])
+                    if a.get("Name") == PYTHON_BOOT
+                )
     done = sorted((j for j in jobs.values() if "end" in j), key=lambda j: j["start"])
     return done, stages
 
@@ -151,17 +161,18 @@ def main(path: str, slots: int) -> None:
     by = collections.defaultdict(list)
     for j in done:
         by[j["desc"]].append((j["start"], j["end"]))
-    py_tasks = collections.Counter()
+    py_tasks, py_boot_ms = collections.Counter(), collections.Counter()
     for st in stages.values():
         py_tasks[st["desc"]] += min(st["py_parts"], st["n_tasks"])
+        py_boot_ms[st["desc"]] += st["py_boot_ms"]
     rows = sorted(
         ((sum(b - a for a, b in merge(iv)) / 1000.0, len(iv), desc) for desc, iv in by.items()),
         reverse=True,
     )
     print(f"app wall (first job start -> last job end): {total:.1f}s\n")
-    print(f"{'wall_s':>8} {'jobs':>5} {'py_tasks':>8}  description")
+    print(f"{'wall_s':>8} {'jobs':>5} {'py_tasks':>8} {'py_boot_s':>9}  description")
     for wall, n, desc in rows[:40]:
-        print(f"{wall:8.2f} {n:5d} {py_tasks[desc]:8d}  {desc[:100]}")
+        print(f"{wall:8.2f} {n:5d} {py_tasks[desc]:8d} {py_boot_ms[desc] / 1000:9.2f}  {desc[:100]}")
     per_round = collections.Counter()
     for desc, n in py_tasks.items():
         head = desc.split(":", 1)[0]
